@@ -28,8 +28,9 @@ Module map (see SURVEY.md §7):
     metrics       structured metrics
     textops       token counts / lang-ID / quality / fingerprints
     dedupe_docs   exact / Jaccard / MinHash-LSH / SimHash near-dup
-    sigindex      persistent MinHash index, change-feed maintained;
-                  consume_changes (public consumer-window API)
+    derived       IncrementalIndex (base of every change-feed maintained
+                  table); consume_changes (public consumer-window API)
+    sigindex      persistent MinHash index, change-feed maintained
     vecindex      persistent LSH-ANN vector index, change-feed maintained
     aggview       incremental materialized GROUP BY (IVM: retract-and-apply
                   count/sum/avg; min/max monotone + tie-triggered re-agg)

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
+from .derived import IncrementalIndex, advance_pin, change_window
 from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
 
 _META_NAME = "aggview.json"
 _GK = "_gk"
@@ -290,7 +290,7 @@ class AggView(IncrementalIndex):
         # values (the exact corruption _evolve_with_source exists to stop)
         src_table.refresh()
         self._evolve_with_source(src_table)
-        from_sid, to_sid, ch = self._window(src_table, consumer=consumer, mode="cdf")
+        from_sid, to_sid, ch = change_window(src_table, consumer=consumer, mode="cdf")
         if ch is None:
             return {"skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid}
         gcols = self.group_cols
@@ -405,7 +405,7 @@ class AggView(IncrementalIndex):
             seq_col="_seq", op_col="_change", delete_value="delete",
             fence=False, tombstones=True, mor=None,
         )
-        self._advance(src_table, consumer, from_sid, to_sid)
+        advance_pin(src_table, consumer, from_sid, to_sid)
         m = self._compact_if_needed(m)
         return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
 

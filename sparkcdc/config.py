@@ -43,11 +43,14 @@ class JobConfig:
     n_buckets: int = 64
     dynamic_schema: bool = False  # re-infer schema per run (JiraInputPlugin.java:89-91)
     merge_mode: str = "cow"  # "cow" (rewrite touched buckets) | "mor" (delta files) | "auto" (cost-based per batch)
-    compact_every: int | None = None  # mor: fold deltas every N batches
+    # table maintenance after every commit, applied by both front ends
+    # (run() and the streaming sink), each counting its own commits:
+    compact_every: int | None = None  # mor: fold deltas every N commits
     compact_delta_files: int | None = None  # fold when manifest holds > N delta files
     # auto partition evolution: when the table's average bucket exceeds
-    # this many bytes, the engine rebuckets (doubling) after the batch —
-    # bucket count tracks table growth without operator intervention
+    # this many bytes, the engine rebuckets (doubling) after the commit,
+    # in batch and streaming runs alike — bucket count tracks table
+    # growth without operator intervention
     target_bucket_bytes: int | None = None
     log_format: str = "parquet"  # "parquet" | "json" (JSON-lines WAL)
     # streaming front-end knobs (streaming.run_streaming / stateful sink):
@@ -105,11 +108,12 @@ class JobConfig:
     # carries the ``seq_col`` column — its parquet-footer max (zero-job).
     bootstrap_path: str | None = None
     bootstrap_lsn: int | None = None
-    # snapshot retention, engine-driven: every ``expire_every`` applied
-    # batches the run loop calls expire_snapshots(keep_last=
-    # retention_keep_last). Consumer pins and named tags clamp the window,
-    # so continuous index/view/packed maintenance is never broken by
-    # retention. Unset = retention stays a manual/maintenance-job concern.
+    # snapshot retention, engine-driven: every ``expire_every`` commits
+    # both front ends (the run loop and the streaming sink) call
+    # expire_snapshots(keep_last=retention_keep_last). Consumer pins and
+    # named tags clamp the window, so continuous index/view/packed
+    # maintenance is never broken by retention. Unset = retention stays
+    # a manual/maintenance-job concern.
     expire_every: int | None = None
     retention_keep_last: int = 10
     # dead-letter queue for malformed WAL events: rows with a null key,

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
+from .derived import IncrementalIndex
 from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
 
 import json
 

@@ -23,11 +23,21 @@ from pyspark.sql import types as T
 
 from .changelog import max_seq, scan_slice
 from .config import ConfigError, JobConfig
-from .icebox import IceboxTable
+from .derived import too_many_deltas
+from .icebox import IceboxTable, bucket_expr
 from .metrics import MetricsLog
 from .schema_infer import detect_evolution
 
 PREVIEW_RECORDS_COUNT = 10  # Constant.java:8
+
+# the derived tables a commit is folded into, in refresh order:
+# (CDCEngine attribute, record kind, the refresh result's count field)
+_DERIVED = (
+    ("sigindex", "index-refresh", "applied_events"),
+    ("packed", "packed-refresh", "applied_shards"),
+    ("vecindex", "vecindex-refresh", "applied_events"),
+    ("aggview", "aggview-refresh", "applied_events"),
+)
 
 # java exception classes that signal a deterministic (non-retryable) failure
 _NON_RETRYABLE_JAVA = (
@@ -140,12 +150,11 @@ class CDCEngine:
         # per-run prefetched merge-probe statistics, keyed by (lo, hi)
         # batch range (see _prefetch_probe_stats)
         self._probe_stats: dict[tuple[int, int], dict] = {}
+        tbl_schema = self.table.schema
         self.sigindex = None
         if cfg.sigindex_path:
-            from .config import ConfigError
             from .sigindex import SignatureIndex
 
-            tbl_schema = self.table.schema
             if cfg.sigindex_text_col not in tbl_schema.names:
                 raise ConfigError(
                     f"sigindex_text_col {cfg.sigindex_text_col!r} not in the "
@@ -166,12 +175,8 @@ class CDCEngine:
                 )
         self.packed = None
         if cfg.packed_path:
-            import pyspark.sql.types as T
-
-            from .config import ConfigError
             from .packing import PackedTable
 
-            tbl_schema = self.table.schema
             for role, col in (("packed_tokens_col", cfg.packed_tokens_col),
                               ("packed_shard_col", cfg.packed_shard_col)):
                 if col not in tbl_schema.names:
@@ -209,27 +214,21 @@ class CDCEngine:
         self.aggview = None
         if cfg.aggview_path:
             from .aggview import AggSpecError, AggView
-            from .config import ConfigError
 
+            want_groups = list(cfg.aggview_group_cols or [])
+            want_aggs = {
+                k: (v[0], v[1]) for k, v in (cfg.aggview_aggs or {}).items()
+            }
             if AggView.table_exists(cfg.aggview_path):
                 self.aggview = AggView.load(spark, cfg.aggview_path)
                 # a loaded view keeps maintaining its PERSISTED spec; a
                 # silently-ignored config change would leave the operator
                 # believing the new spec is live — fail loudly instead
-                want_groups = list(cfg.aggview_group_cols or [])
-                want_aggs = {
-                    k: (v[0], v[1]) for k, v in (cfg.aggview_aggs or {}).items()
-                }
-                have_aggs = {
-                    k: (kind, col) for k, (kind, col) in self.aggview.aggs.items()
-                }
-                if (
-                    list(self.aggview.group_cols) != want_groups
-                    or have_aggs != want_aggs
-                ):
+                have_groups, have_aggs = self.aggview.group_cols, self.aggview.aggs
+                if (have_groups, have_aggs) != (want_groups, want_aggs):
                     raise ConfigError(
                         f"aggview at {cfg.aggview_path!r} was created with "
-                        f"group_cols={list(self.aggview.group_cols)}, "
+                        f"group_cols={have_groups}, "
                         f"aggs={have_aggs}, but the config now declares "
                         f"group_cols={want_groups}, aggs={want_aggs} — drop "
                         f"the view (or point aggview_path elsewhere) to "
@@ -238,21 +237,15 @@ class CDCEngine:
             else:
                 try:
                     self.aggview = AggView.create(
-                        spark, cfg.aggview_path,
-                        group_cols=list(cfg.aggview_group_cols),
-                        aggs={k: (v[0], v[1]) for k, v in cfg.aggview_aggs.items()},
-                        source_schema=self.table.schema,
+                        spark, cfg.aggview_path, group_cols=want_groups,
+                        aggs=want_aggs, source_schema=tbl_schema,
                     )
                 except AggSpecError as exc:
                     raise ConfigError(f"aggview spec invalid: {exc}") from exc
         self.vecindex = None
         if cfg.vecindex_path:
-            import pyspark.sql.types as T
-
-            from .config import ConfigError
             from .vecindex import VectorIndex
 
-            tbl_schema = self.table.schema
             if cfg.key != "vec_id":
                 raise ConfigError(
                     "continuous ANN-index maintenance requires key='vec_id' "
@@ -352,8 +345,6 @@ class CDCEngine:
                 )
             )
         )
-        from .icebox import bucket_expr
-
         key, nb = self.table.key, self.table.n_buckets
         lo0, b = plan[0][0], self.cfg.batch_size
         idx = F.floor(
@@ -372,10 +363,16 @@ class CDCEngine:
             rng: {"lo": rng[0], "nb": nb, "key": key, "rows": []} for rng in plan
         }
         for r in rows:
+            i = int(r["_i"])
+            if not 0 <= i < len(plan):
+                # an LSN off the uniform grid (e.g. a fractional seq
+                # truncated below its batch's floor): the batch index
+                # cannot be trusted, so every batch probes for itself
+                return {}
             entry = {"_bucket": r["_bucket"], "n": r["n"], "mx": r["mx"]}
             if has_ts:
                 entry["mts"] = r["mts"]
-            out[plan[int(r["_i"])]]["rows"].append(entry)
+            out[plan[i]]["rows"].append(entry)
         return out
 
     # ---------------- evolution ----------------
@@ -506,8 +503,6 @@ class CDCEngine:
                 self.cfg.bootstrap_path, seq_col=self.cfg.seq_col
             )
         if lsn is None:
-            from .config import ConfigError
-
             raise ConfigError(
                 f"bootstrap_lsn is required: the dump at "
                 f"{self.cfg.bootstrap_path!r} carries no "
@@ -627,7 +622,8 @@ class CDCEngine:
             self.metrics.emit({"kind": "dlq", "reason": "null-seq", "rows": n})
 
     def apply_batch(self, lo: int, hi: int) -> dict:
-        t0 = time.time()
+        """Scan, quarantine, evolve and commit one LSN range. Returns the
+        commit's facts and merge metrics (``_post_commit`` emits them)."""
         batch = self._apply_dynamic_ts(
             self._project_declared(
                 scan_slice(self.log, lo, hi, seq_col=self.cfg.seq_col)
@@ -678,54 +674,116 @@ class CDCEngine:
                     raise
                 time.sleep(min(wait, self.cfg.retry_max_wait_sec))
                 wait *= 2  # exponential backoff (JiraInputPlugin.java:69-75)
-        if m.get("reason") == "audit-failed":
+        failed = m.get("reason") == "audit-failed"
+        if failed and self.cfg.audit_on_fail == "abort":
             from .audit import AuditFailedError
 
-            if self.cfg.audit_on_fail == "abort":
-                raise AuditFailedError(batch_id, m["audit"])
+            raise AuditFailedError(batch_id, m["audit"])
+        return {
             # quarantine: report + continue; the batch's events become
             # permanently fenced once a later batch advances the LSN
-            return self.metrics.emit(
-                {
-                    "kind": "batch-quarantined",
-                    "lo": lo,
-                    "hi": hi,
-                    "batch_id": batch_id,
-                    "duration_sec": time.time() - t0,
-                    "audit": m["audit"],
-                }
-            )
+            "kind": "batch-quarantined" if failed else "batch",
+            "lo": lo,
+            "hi": hi,
+            # range width is planning info; the headline denominator is the
+            # probe's actual pre-dedup row count (applied_events) so dup
+            # delivery / gaps / re-fenced replays can't skew the rate
+            "range_width": hi - lo,
+            "schema_changes": changes,
+            "quarantined_rows": n_dlq,
+            **m,
+        }
+
+    def _commit_record(self, rec: dict, t0: float) -> dict:
+        """A commit's facts (``rec``: kind, range or epoch, merge metrics)
+        plus its wall since ``t0``, its rates and its watermark lag — the
+        one record shape of ``batch`` and ``stream-batch``."""
         dur = time.time() - t0
         # watermark lag from the merge's probe action (no extra scan)
-        mts = m.get("max_event_ts")
+        mts = rec.get("max_event_ts")
         lag = (
             time.time() - datetime.datetime.fromisoformat(mts).replace(
                 tzinfo=datetime.timezone.utc).timestamp()
             if mts
             else None
         )
-        per_bucket_rate = {
-            b: (n / dur if dur else 0.0)
-            for b, n in m.get("per_bucket_applied", {}).items()
-        }
-        rec = {
-            "kind": "batch",
-            "lo": lo,
-            "hi": hi,
-            "per_bucket_events_per_sec": per_bucket_rate,
-            # range width is planning info; the headline denominator is the
-            # probe's actual pre-dedup row count (applied_events) so dup
-            # delivery / gaps / re-fenced replays can't skew the rate
-            "range_width": hi - lo,
-            "quarantined_rows": n_dlq,
+        out = {
+            **rec,
             "duration_sec": dur,
             # headline metric: change-events processed end-to-end per sec
-            "events_per_sec": (m.get("applied_events", 0) / dur) if dur else 0.0,
-            "range_per_sec": ((hi - lo) / dur) if dur else 0.0,
+            "events_per_sec": rec.get("applied_events", 0) / dur if dur else 0.0,
+            "per_bucket_events_per_sec": {
+                b: (n / dur if dur else 0.0)
+                for b, n in rec.get("per_bucket_applied", {}).items()
+            },
             "watermark_lag_sec": lag,
-            **m,
         }
-        return self.metrics.emit(rec)
+        if "range_width" in rec:
+            out["range_per_sec"] = rec["range_width"] / dur if dur else 0.0
+        return out
+
+    def _timed(self, kind: str, step, *args, **kwargs) -> None:
+        """Run one table-maintenance ``step`` and emit its result as a
+        ``kind`` record carrying the step's wall time."""
+        t0 = time.time()
+        out = step(*args, **kwargs)
+        self.metrics.emit({"kind": kind, **out, "duration_sec": time.time() - t0})
+
+    def _post_commit(self, rec: dict, t0: float, ordinal: int) -> None:
+        """Everything that follows a commit, for both front ends (``run``
+        and the streaming sink): emit the commit record, fold the commit
+        into each configured derived table, then table maintenance.
+        ``ordinal`` is the commit's 1-based position in its run, which
+        ``expire_every`` and ``compact_every`` count in."""
+        self.metrics.emit(self._commit_record(rec, t0))
+        cfg = self.cfg
+        opts = {
+            "sigindex": {"text_col": cfg.sigindex_text_col},
+            "vecindex": {"vec_col": cfg.vecindex_vec_col},
+        }
+        for attr, kind, count in _DERIVED:
+            # looked up per commit, never cached: each refresh folds the
+            # change feed since its own consumer pin — O(batch),
+            # exactly-once, and a replayed commit's refresh is a
+            # (from, to)-identical fenced no-op
+            view = getattr(self, attr)
+            if view is None:
+                continue
+            t = time.time()
+            ref = view.refresh_from(self.table, **opts.get(attr, {}))
+            self.metrics.emit({
+                "kind": kind,
+                "from_snapshot": ref.get("from_snapshot"),
+                "to_snapshot": ref.get("to_snapshot"),
+                count: ref.get(count, 0),
+                "duration_sec": time.time() - t,
+            })
+        if cfg.target_bucket_bytes:
+            # stats-driven partition evolution: bucket count doubles
+            # whenever the average bucket outgrows the target — the
+            # layout tracks table growth (64 buckets at GB scale,
+            # 10⁴ at 100 TB) with no operator intervention. Statistics
+            # are already in the manifest; no extra IO.
+            total = sum(e.get("bytes", 0) for e in self.table.snapshot["manifest"])
+            nb = self.table.n_buckets
+            while total > cfg.target_bucket_bytes * nb:
+                nb *= 2
+            if nb != self.table.n_buckets:
+                self._timed("rebucket", self.table.rebucket, nb)
+        if cfg.expire_every and ordinal % cfg.expire_every == 0:
+            # engine-driven retention: consumer pins and tags clamp
+            # the expiration window, so the continuously-maintained
+            # indexes/views/packed tables keep their change feeds
+            self._timed(
+                "expire", self.table.expire_snapshots,
+                keep_last=cfg.retention_keep_last,
+            )
+        if (cfg.compact_every and ordinal % cfg.compact_every == 0) or (
+            # stats-driven maintenance: fold merge-on-read deltas as
+            # soon as read amplification crosses the threshold
+            too_many_deltas(self.table, cfg.compact_delta_files)
+        ):
+            self._timed("compact", self.table.compact)
 
     def run(self, max_batches: int | None = None) -> dict:
         """Apply all pending ranges (resumable at any point)."""
@@ -745,102 +803,21 @@ class CDCEngine:
         plan = self.plan_batches()
         if max_batches is not None:
             plan = plan[:max_batches]
-        self._probe_stats = (
-            self._prefetch_probe_stats(plan)
-            if plan
-            and not self._dlq_split
-            and len(plan) * self.table.n_buckets <= 200_000
-            else {}
-        )
-        for i, (lo, hi) in enumerate(plan, 1):
-            self.apply_batch(lo, hi)
-            if self.sigindex is not None:
-                # continuous dedup-index maintenance: fold the batch just
-                # committed into the signature index via the change feed —
-                # O(batch), exactly-once (sigindex.py), so an ingest-time
-                # dedup probe always sees the current corpus
-                ref = self.sigindex.refresh_from(
-                    self.table, text_col=self.cfg.sigindex_text_col
-                )
-                self.metrics.emit({
-                    "kind": "index-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.packed is not None:
-                # continuous packed-corpus maintenance: re-pack only the
-                # shards this batch touched (packing.PackedTable) — the
-                # training-sequence table is current at every commit point
-                ref = self.packed.refresh_from(self.table)
-                self.metrics.emit({
-                    "kind": "packed-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_shards": ref.get("applied_shards", 0),
-                })
-            if self.vecindex is not None:
-                # continuous ANN-index maintenance: bucket-hash only the
-                # vectors this batch changed (vecindex.VectorIndex)
-                ref = self.vecindex.refresh_from(
-                    self.table, vec_col=self.cfg.vecindex_vec_col
-                )
-                self.metrics.emit({
-                    "kind": "vecindex-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.aggview is not None:
-                # continuous rollup maintenance: retract-and-apply the
-                # batch's pre/post images into the materialized GROUP BY
-                # (aggview.AggView) — dashboards/mixing-weight jobs read a
-                # current aggregate without ever re-scanning the corpus
-                ref = self.aggview.refresh_from(self.table)
-                self.metrics.emit({
-                    "kind": "aggview-refresh",
-                    "from_snapshot": ref.get("from_snapshot"),
-                    "to_snapshot": ref.get("to_snapshot"),
-                    "applied_events": ref.get("applied_events", 0),
-                })
-            if self.cfg.target_bucket_bytes:
-                # stats-driven partition evolution: bucket count doubles
-                # whenever the average bucket outgrows the target — the
-                # layout tracks table growth (64 buckets at GB scale,
-                # 10⁴ at 100 TB) with no operator intervention. Statistics
-                # are already in the manifest; no extra IO.
-                total = sum(
-                    e.get("bytes", 0) for e in self.table.snapshot["manifest"]
-                )
-                nb = self.table.n_buckets
-                if total > self.cfg.target_bucket_bytes * nb:
-                    new_nb = nb
-                    while total > self.cfg.target_bucket_bytes * new_nb:
-                        new_nb *= 2
-                    self.metrics.emit(
-                        {"kind": "rebucket", **self.table.rebucket(new_nb)}
-                    )
-            if self.cfg.expire_every and i % self.cfg.expire_every == 0:
-                # engine-driven retention: consumer pins and tags clamp
-                # the expiration window, so the continuously-maintained
-                # indexes/views/packed tables keep their change feeds
-                self.metrics.emit({
-                    "kind": "expire",
-                    **self.table.expire_snapshots(
-                        keep_last=self.cfg.retention_keep_last
-                    ),
-                })
-            if self.cfg.compact_every and i % self.cfg.compact_every == 0:
-                self.metrics.emit({"kind": "compact", **self.table.compact()})
-            elif self.cfg.compact_delta_files is not None:
-                # stats-driven maintenance: fold merge-on-read deltas as
-                # soon as read amplification crosses the threshold
-                n_delta = sum(
-                    1 for e in self.table.snapshot["manifest"]
-                    if e.get("kind") == "delta"
-                )
-                if n_delta > self.cfg.compact_delta_files:
-                    self.metrics.emit({"kind": "compact", **self.table.compact()})
+        try:
+            self._probe_stats = (
+                self._prefetch_probe_stats(plan)
+                if plan
+                and not self._dlq_split
+                and len(plan) * self.table.n_buckets <= 200_000
+                else {}
+            )
+            for i, (lo, hi) in enumerate(plan, 1):
+                t0 = time.time()
+                self._post_commit(self.apply_batch(lo, hi), t0, i)
+        finally:
+            # prefetched stats describe THIS run's WAL handle and plan; a
+            # later direct apply_batch must probe for itself
+            self._probe_stats = {}
         return self.metrics.totals()
 
     # ---------------- preview (JiraInputPlugin.java:149-152) ----------------

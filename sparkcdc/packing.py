@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
+from .derived import IncrementalIndex, advance_pin, change_window
 from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
 
 
 def pack_sequences(
@@ -354,9 +354,7 @@ class PackedTable(IncrementalIndex):
         """Fold the source table's changes since the last sync into the
         packed table by re-packing only the touched shards."""
         self._evolve_with_source(src_table)
-        from_sid, to_sid, ch = self._window(
-            src_table, consumer=consumer, mode="cdf"
-        )
+        from_sid, to_sid, ch = change_window(src_table, consumer=consumer, mode="cdf")
         if ch is None:
             return {
                 "skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid,
@@ -407,7 +405,7 @@ class PackedTable(IncrementalIndex):
                 ),
                 **m,
             }
-        self._advance(src_table, consumer, from_sid, to_sid)
+        advance_pin(src_table, consumer, from_sid, to_sid)
         m = self._compact_if_needed(m)
         return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
 

@@ -42,7 +42,9 @@ def run_streaming(
     re-reads the whole log under fresh ids → every event re-applies as a
     no-op under LWW (idempotent full replay), never silent data loss."""
     import hashlib
+    import itertools
     import os
+    import time
 
     from .changelog import read_log
 
@@ -52,15 +54,18 @@ def run_streaming(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:10]
 
+    commits = itertools.count(1)
+
     def apply(batch_df, epoch_id: int) -> None:
+        t0 = time.time()
+        batch_id = f"stream-{run_ns}-epoch-{epoch_id}"
         n_dlq = 0
         if engine._dlq_split:
             # streaming batches are file-discovered, not LSN-sliced, so a
             # null seq would reach the merge here — quarantine it per
             # batch (epoch-keyed directory = idempotent under replay)
             batch_df, n_dlq = engine._quarantine_malformed(
-                batch_df, f"stream-{run_ns}-epoch-{epoch_id}",
-                include_null_seq=True,
+                batch_df, batch_id, include_null_seq=True
             )
         changes = engine._maybe_evolve(batch_df)
         # unordered file delivery: no global LSN fence; deletes persist as
@@ -69,65 +74,17 @@ def run_streaming(
         # batches are small relative to the table and land as MOR deltas;
         # the initial backfill batches go copy-on-write
         m = engine.table.merge(
-            batch_df, f"stream-{run_ns}-epoch-{epoch_id}", seq_col=cfg.seq_col,
-            op_col=cfg.op_col, ts_col=cfg.ts_col, fence=False, tombstones=True,
-            mor=None,
+            batch_df, batch_id, seq_col=cfg.seq_col, op_col=cfg.op_col,
+            ts_col=cfg.ts_col, fence=False, tombstones=True, mor=None,
         )
-        engine.metrics.emit({"kind": "stream-batch", "epoch": epoch_id,
-                             "schema_changes": changes,
-                             "quarantined_rows": n_dlq, **m})
-        if cfg.compact_delta_files is not None:
-            n_delta = sum(
-                1 for e in engine.table.snapshot["manifest"]
-                if e.get("kind") == "delta"
-            )
-            if n_delta > cfg.compact_delta_files:
-                engine.metrics.emit({"kind": "compact", **engine.table.compact()})
-        if engine.sigindex is not None:
-            # continuous dedup-index maintenance, streaming form: same
-            # O(batch) change-feed fold as the batch engine loop — the
-            # stream's checkpoint replays are already fenced, and a
-            # replayed epoch's refresh is a (from,to)-identical no-op
-            ref = engine.sigindex.refresh_from(
-                engine.table, text_col=cfg.sigindex_text_col
-            )
-            engine.metrics.emit({
-                "kind": "index-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
-        if engine.packed is not None:
-            # continuous packed-corpus maintenance, streaming form: same
-            # O(touched shards) re-pack as the batch engine loop; a
-            # replayed epoch's refresh is a (from,to)-identical no-op
-            ref = engine.packed.refresh_from(engine.table)
-            engine.metrics.emit({
-                "kind": "packed-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_shards": ref.get("applied_shards", 0),
-            })
-        if engine.vecindex is not None:
-            ref = engine.vecindex.refresh_from(
-                engine.table, vec_col=cfg.vecindex_vec_col
-            )
-            engine.metrics.emit({
-                "kind": "vecindex-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
-        if engine.aggview is not None:
-            # continuous rollup maintenance, streaming form: a replayed
-            # epoch's refresh is a (from,to)-identical fenced no-op
-            ref = engine.aggview.refresh_from(engine.table)
-            engine.metrics.emit({
-                "kind": "aggview-refresh",
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                "applied_events": ref.get("applied_events", 0),
-            })
+        # the batch loop's post-commit path: commit record, derived-table
+        # refresh (a replayed epoch's is a fenced no-op), then maintenance
+        # counted in this stream's commits
+        engine._post_commit(
+            {"kind": "stream-batch", "epoch": epoch_id, "schema_changes": changes,
+             "quarantined_rows": n_dlq, **m},
+            t0, next(commits),
+        )
 
     reader = spark.readStream.schema(static.schema).option(
         "maxFilesPerTrigger", str(cfg.stream_max_files_per_trigger)

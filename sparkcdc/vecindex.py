@@ -31,8 +31,8 @@ from pyspark.sql import types as T
 
 from .ann import _cap_buckets, _dot, _norm, band_seed, lsh_bucket_expr, lsh_planes
 from .commitstore import CommitStore
+from .derived import IncrementalIndex
 from .icebox import IceboxTable
-from .sigindex import IncrementalIndex
 
 _META_NAME = "vecindex.json"
 

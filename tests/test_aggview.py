@@ -341,6 +341,11 @@ def test_engine_maintains_aggview_continuously(spark, tmp_path):
         r for r in eng2.metrics.records if r.get("kind") == "aggview-refresh"
     ]
     assert len(refreshes) >= 2  # one per applied batch
+    assert all(
+        set(r) == {"emitted_at", "kind", "from_snapshot", "to_snapshot",
+                   "applied_events", "duration_sec"}
+        for r in refreshes
+    )
     # validation: a bad spec is a readable config error at engine init
     bad = JobConfig(
         log_path=wal_path, table_path=str(tmp_path / "tbl2"),

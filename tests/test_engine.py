@@ -14,6 +14,29 @@ from sparkcdc.engine import CDCEngine
 from sparkcdc.icebox import IceboxTable
 
 
+# fields every commit record of the streaming sink carries, besides the
+# merge's own metrics
+STREAM_BATCH_FIELDS = {
+    "emitted_at", "kind", "epoch", "schema_changes", "quarantined_rows",
+    "applied_events", "duration_sec", "events_per_sec",
+    "per_bucket_events_per_sec", "watermark_lag_sec",
+}
+
+
+def _refresh_fields(count: str) -> set:
+    """The field set of a derived-table refresh record."""
+    return {"emitted_at", "kind", "from_snapshot", "to_snapshot", count,
+            "duration_sec"}
+
+
+def _metrics_lines(table_path):
+    import json
+    import os
+
+    with open(os.path.join(table_path, "metadata", "metrics.jsonl")) as fh:
+        return [json.loads(line) for line in fh]
+
+
 def _mk_log(spark, tmp_path, n=6_000, docs=500, name="log", **kw):
     path = str(tmp_path / name)
     write_log_parquet(generate_changelog(spark, n, docs, **kw), path)
@@ -153,6 +176,11 @@ def test_streaming_front_end_converges(spark, tmp_path, trigger_files):
     got = IceboxTable.load(spark, cfg.table_path).read().toPandas()
     oracle.assert_table_equal(got, expected)
     assert totals["applied_events"] > 0
+    # stream-batch records carry the batch loop's timing and rate fields
+    assert totals["duration_sec"] > 0 and totals["events_per_sec"] > 0
+    stream = [r for r in _metrics_lines(cfg.table_path)
+              if r["kind"] == "stream-batch"]
+    assert stream and all(STREAM_BATCH_FIELDS <= set(r) for r in stream)
     if trigger_files == 2:
         # smaller trigger → strictly more micro-batches over the same WAL
         n_files = len(spark.read.parquet(log_path).inputFiles())
@@ -588,6 +616,7 @@ def test_stats_driven_auto_compaction(spark, tmp_path):
     eng = CDCEngine(spark, cfg)
     eng.run(max_batches=20)  # first big-ish batches COW, then deltas pile up
     compacts = [r for r in eng.metrics.records if r.get("kind") == "compact"]
+    assert all("duration_sec" in r for r in compacts)
     manifest = eng.table.snapshot["manifest"]
     n_delta = sum(1 for e in manifest if e.get("kind") == "delta")
     assert n_delta <= 12 + cfg.n_buckets  # bounded by threshold + one round
@@ -731,8 +760,9 @@ def test_chaos_auto_mode_scenario(spark, tmp_path):
 
 def test_streaming_auto_mode_with_compaction(spark, tmp_path):
     """Streaming path with cost-based writes: steady-state micro-batches
-    land as MOR deltas and compact_delta_files folds them; the drained
-    table still equals the oracle."""
+    land as MOR deltas and compact_delta_files folds them; expire_every
+    expires snapshots every other stream commit; the drained table still
+    equals the oracle."""
     from sparkcdc.streaming import run_streaming
 
     log = generate_changelog(spark, 4_000, 300, seed=65, dup_pct=10)
@@ -740,11 +770,15 @@ def test_streaming_auto_mode_with_compaction(spark, tmp_path):
     # many small files → many small stream epochs after the first
     log.repartition(24).write.parquet(log_dir)
     cfg = JobConfig(log_path=log_dir, table_path=str(tmp_path / "tbl"),
-                    n_buckets=8, compact_delta_files=16)
+                    n_buckets=8, compact_delta_files=16, expire_every=2)
     run_streaming(spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"))
     t = IceboxTable.load(spark, cfg.table_path)
     n_delta = sum(1 for e in t.snapshot["manifest"] if e.get("kind") == "delta")
     assert n_delta <= 16 + cfg.n_buckets  # compaction kept deltas bounded
+    recs = _metrics_lines(cfg.table_path)
+    expires = [r for r in recs if r["kind"] == "expire"]
+    assert expires and all("duration_sec" in r for r in expires)
+    assert all("duration_sec" in r for r in recs if r["kind"] == "compact")
     expected = oracle.replay(spark.read.parquet(log_dir).toPandas())
     oracle.assert_table_equal(t.read().toPandas(), expected)
 
@@ -901,6 +935,7 @@ def test_auto_rebucket_grows_layout_with_table(spark, tmp_path):
     assert eng.table.n_buckets % 2 == 0  # doubling steps
     rebuckets = [e for e in eng.metrics.records if e.get("kind") == "rebucket"]
     assert rebuckets and all(r["rebucketed"] for r in rebuckets)
+    assert all(r["duration_sec"] > 0 for r in rebuckets)
     # avg bucket size was brought back under target at each step
     last = rebuckets[-1]
     assert last["n_buckets"] == eng.table.n_buckets
@@ -1146,6 +1181,7 @@ def test_engine_maintains_sigindex_continuously(spark, tmp_path):
     assert_synced()
     refreshes = [r for r in eng2.metrics.records if r.get("kind") == "index-refresh"]
     assert len(refreshes) >= 2  # one per applied batch
+    assert all(set(r) == _refresh_fields("applied_events") for r in refreshes)
     # validation: a payload without the text column is rejected up front
     plain = str(tmp_path / "plainwal")
     write_log_parquet(log, plain)
@@ -1255,6 +1291,7 @@ def test_engine_maintains_packed_table_continuously(spark, tmp_path):
     assert_synced(eng2)
     refreshes = [r for r in eng2.metrics.records if r.get("kind") == "packed-refresh"]
     assert len(refreshes) >= 2  # one per applied batch
+    assert all(set(r) == _refresh_fields("applied_shards") for r in refreshes)
     # handle reload sees the same state
     pt = PackedTable.load(spark, cfg.packed_path)
     assert pt.refresh_from(eng2.table)["skipped"] is True
@@ -1269,8 +1306,9 @@ def test_engine_maintains_packed_table_continuously(spark, tmp_path):
 
 def test_streaming_sink_maintains_packed_table(spark, tmp_path):
     """The streaming front-end performs the same continuous packed-corpus
-    maintenance as the batch loop; a replayed-checkpoint restart leaves
-    the chunks unchanged (fenced no-ops)."""
+    and aggregate-view maintenance as the batch loop; a replayed-checkpoint
+    restart leaves the chunks and the view unchanged (fenced no-ops)."""
+    from sparkcdc.aggview import AggView
     from sparkcdc.changelog import generate_changelog, write_log_parquet
     from sparkcdc.packing import PackedTable, pack_documents
     from sparkcdc.streaming import run_streaming
@@ -1290,6 +1328,8 @@ def test_streaming_sink_maintains_packed_table(spark, tmp_path):
     cfg = JobConfig(
         log_path=wal_path, table_path=str(tmp_path / "spktbl"), n_buckets=8,
         packed_path=str(tmp_path / "spk"), packed_seq_len=32,
+        aggview_path=str(tmp_path / "sagg"), aggview_group_cols=["source"],
+        aggview_aggs={"n_docs": ["count", None]},
     )
     totals = run_streaming(spark, cfg, checkpoint_dir=str(tmp_path / "spkck"))
     assert totals["applied_events"] > 0
@@ -1297,6 +1337,13 @@ def test_streaming_sink_maintains_packed_table(spark, tmp_path):
     from sparkcdc.icebox import IceboxTable
 
     tbl = IceboxTable.load(spark, cfg.table_path)
+
+    def view_rows():
+        return AggView.load(spark, cfg.aggview_path).read().orderBy("source").collect()
+
+    want_view = tbl.read().groupBy("source").agg(
+        F.count("*").alias("n_docs")).orderBy("source").collect()
+    assert view_rows() == want_view and want_view
     pt = PackedTable.load(spark, cfg.packed_path)
     got = sorted(
         tuple(r) for r in pt.chunks().select(
@@ -1326,6 +1373,7 @@ def test_streaming_sink_maintains_packed_table(spark, tmp_path):
         ).collect()
     )
     assert got2 == got
+    assert view_rows() == want_view
 
 
 def test_packed_config_validation():
@@ -1402,6 +1450,7 @@ def test_engine_maintains_vecindex_continuously(spark, tmp_path):
     refreshes = [r for r in eng2.metrics.records
                  if r.get("kind") == "vecindex-refresh"]
     assert refreshes
+    assert all(set(r) == _refresh_fields("applied_events") for r in refreshes)
     # validation: wrong key / missing dim rejected up front
     with pytest.raises(ConfigError, match="vec_id"):
         CDCEngine(spark, JobConfig(

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from sparkcdc.changelog import generate_changelog, write_log_parquet
 from sparkcdc.config import JobConfig
 from sparkcdc.engine import CDCEngine
@@ -19,13 +21,23 @@ def _write_wal(spark, path, **kw):
     )
 
 
-def _run(spark, wal, tbl, *, disable_prefetch=False, **cfg_kw):
+def _run(spark, wal, tbl, *, disable_prefetch=False, prefetched=None, **cfg_kw):
+    """Replay ``wal`` into ``tbl``; ``prefetched`` (a list) collects what
+    each run's prefetch returned."""
     cfg = JobConfig(
         log_path=wal, table_path=tbl, batch_size=3_500, n_buckets=8, **cfg_kw
     )
     eng = CDCEngine(spark, cfg)
     if disable_prefetch:
         eng._prefetch_probe_stats = lambda plan: {}
+    elif prefetched is not None:
+        real = eng._prefetch_probe_stats
+
+        def recording(plan):
+            prefetched.append(real(plan))
+            return prefetched[-1]
+
+        eng._prefetch_probe_stats = recording
     eng.run()
     return eng
 
@@ -49,12 +61,14 @@ def _rows(eng):
 def test_prefetch_matches_per_batch_probe(spark, tmp_path):
     wal = os.path.join(tmp_path, "wal")
     _write_wal(spark, wal, seed=7, hot_key_pct=10, dup_pct=5)
-    a = _run(spark, wal, os.path.join(tmp_path, "ta"))
+    prefetched: list = []
+    a = _run(spark, wal, os.path.join(tmp_path, "ta"), prefetched=prefetched)
     b = _run(spark, wal, os.path.join(tmp_path, "tb"), disable_prefetch=True)
     # every planned range got a prefetched entry and the per-batch probe
     # was actually skipped in favor of it (probe time ≈ 0 means no job,
     # but assert on the mechanism, not the clock: stats were populated)
-    assert a._probe_stats and all(e["rows"] for e in a._probe_stats.values())
+    [stats] = prefetched
+    assert stats and all(e["rows"] for e in stats.values())
     assert _batch_metrics(a) == _batch_metrics(b)
     assert _rows(a) == _rows(b)
 
@@ -119,3 +133,39 @@ def test_prefetch_resume_from_checkpoint(spark, tmp_path):
     resumed.run()
     ref = _run(spark, wal, os.path.join(tmp_path, "ref"), disable_prefetch=True)
     assert _rows(resumed) == _rows(ref)
+
+
+def test_run_clears_probe_stats_on_exit(spark, tmp_path):
+    """Prefetched stats never outlive the run that computed them: neither
+    a partial run nor one that raises leaves entries a later direct
+    apply_batch could consume after the WAL changed."""
+    wal = os.path.join(tmp_path, "wal")
+    _write_wal(spark, wal, seed=15)
+    cfg = JobConfig(log_path=wal, table_path=os.path.join(tmp_path, "t"),
+                    batch_size=3_500, n_buckets=8)
+    eng = CDCEngine(spark, cfg)
+    eng.run(max_batches=2)
+    assert eng._probe_stats == {}
+
+    def crash(lo, hi):
+        assert eng._probe_stats  # the remaining ranges were prefetched
+        raise RuntimeError("crash mid-run")
+
+    eng.apply_batch = crash
+    with pytest.raises(RuntimeError, match="crash mid-run"):
+        eng.run()
+    assert eng._probe_stats == {}
+
+
+def test_prefetch_drops_off_grid_batch_index(spark, tmp_path):
+    """A seq the uniform grid maps outside the plan (a fractional seq just
+    above the first range's floor truncates to batch index -1) drops the
+    whole prefetch rather than wrapping to the last batch's stats."""
+    log = spark.createDataFrame(
+        [(0.5, "upsert", "a", 1), (1_500.0, "upsert", "b", 2)],
+        "seq double, op string, doc_id string, v long",
+    )
+    cfg = JobConfig(log_path="unused", table_path=os.path.join(tmp_path, "t"),
+                    batch_size=1_000, n_buckets=2)
+    eng = CDCEngine(spark, cfg, log_df=log)
+    assert eng._prefetch_probe_stats([(0, 1_000), (1_000, 2_000)]) == {}

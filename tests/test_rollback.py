@@ -286,7 +286,7 @@ def test_rollback_of_update_emits_reversal_and_consumers_self_heal(
     # LWW-merged consumer (IncrementalIndex machinery) heals too: the
     # refresh-window snapshot id is its merge seq, so the restored
     # (lower-seq) payload wins over the stale indexed version
-    from sparkcdc.sigindex import IncrementalIndex
+    from sparkcdc.derived import IncrementalIndex
 
     class _Mirror(IncrementalIndex):
         def __init__(self, table):

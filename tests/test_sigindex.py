@@ -587,7 +587,7 @@ def test_consume_changes_public_consumer_api(spark, tmp_path, doc_table):
     window = only the changes, crash-before-advance replays the SAME
     window, up-to-date call is a skipped no-op, and the registry pin
     tracks the sink."""
-    from sparkcdc.sigindex import consume_changes
+    from sparkcdc.derived import consume_changes
 
     docs = _docs(spark)
     doc_table.merge(_as_log(docs.where(F.col("doc_id") % 2 == 0)), "b1")
