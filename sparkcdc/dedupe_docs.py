@@ -524,7 +524,14 @@ def simhash_chunk_pairs(
     path above and the persistent SimhashIndex (which stores sims and
     must never re-hash the corpus). Cap semantics identical to
     ``simhash_near_pairs``; callers own the default-cap computation
-    because only they know where a cheap row count comes from."""
+    because only they know where a cheap row count comes from.
+
+    Precondition: ``h`` holds exactly one ``sim`` per ``doc_id`` (a
+    keyed table read such as ``SimhashIndex.sims()``, or a corpus whose
+    ``doc_id`` is unique). The pair dedup below relies on ``(doc1,
+    doc2)`` determining the hamming distance; a doc with two sims can
+    emit the same pair twice with different distances. Not checked
+    here — that would cost a shuffle of ``h``."""
     chunks = sim_chunks(h)
     if max_chunk > 0:
         w = Window.partitionBy("chunk_idx", "chunk").orderBy(

@@ -804,13 +804,21 @@ class CDCEngine:
         if max_batches is not None:
             plan = plan[:max_batches]
         try:
-            self._probe_stats = (
-                self._prefetch_probe_stats(plan)
-                if plan
+            if (
+                plan
                 and not self._dlq_split
                 and len(plan) * self.table.n_buckets <= 200_000
-                else {}
-            )
+            ):
+                t0 = time.time()
+                self._probe_stats = self._prefetch_probe_stats(plan)
+                # batches = those given prefetched stats (0 when the pass
+                # fell back to per-batch probes); rows = stat rows collected
+                self.metrics.emit({
+                    "kind": "prefetch",
+                    "batches": len(self._probe_stats),
+                    "rows": sum(len(s["rows"]) for s in self._probe_stats.values()),
+                    "duration_sec": time.time() - t0,
+                })
             for i, (lo, hi) in enumerate(plan, 1):
                 t0 = time.time()
                 self._post_commit(self.apply_batch(lo, hi), t0, i)

@@ -1523,19 +1523,47 @@ class IceboxTable:
             hi = mx if hi is None else max(hi, mx)
         return None if lo is None else (lo, hi)
 
-    def _register_files(self, out_path: str, schema_v: int, *, kind: str | None = None) -> tuple[list[dict], int]:
-        """Collect written data files into manifest entries; parquet footers
-        read concurrently (driver-side serial cost otherwise). Each entry
-        records whether the file holds tombstone rows (so compaction can
-        skip tombstone-free buckets), the key's min/max (file-level range
-        pruning for point lookups) and the max _seq (so maintenance
-        operations can rebuild per-bucket lineage) — all from footer stats
-        already in hand, no extra data IO."""
-        import pyarrow.parquet as pq
+    def _write_buckets(
+        self, df: DataFrame, snap: dict, *, sort_by: F.Column | None = None,
+        max_file_rows: int | None = None, kind: str | None = None,
+        phase_t: dict | None = None, since: float = 0.0,
+    ) -> tuple[list[dict], int]:
+        """The one bucket writer of merge, compact and rebucket; returns
+        the new manifest entries and their row count. ``df`` carries
+        ``_bucket`` and is hash-partitioned on the key to its bucket
+        layout, so each task writes whole buckets. Rows are sorted by
+        ``sort_by`` within each bucket when given and split into files of
+        at most ``max_file_rows`` rows. With ``phase_t``, records
+        ``write_sec`` (since ``since``) and ``footer_sec``.
+
+        Registration reads the parquet footers concurrently (driver-side
+        serial cost otherwise). Each entry records whether the file holds
+        tombstone rows (so compaction can skip tombstone-free buckets),
+        the key's min/max (file-level range pruning for point lookups) and
+        the max _seq (so maintenance operations can rebuild per-bucket
+        lineage) — all from footer stats already in hand, no extra data
+        IO. ``kind="delta"`` marks merge-on-read files."""
+        import time as _time
         from concurrent.futures import ThreadPoolExecutor
 
+        import pyarrow.parquet as pq
+
+        if sort_by is not None:
+            df = df.sortWithinPartitions("_bucket", sort_by)
+        writer = df.write.partitionBy("_bucket").mode("overwrite")
+        if max_file_rows is not None:
+            # task output is written in sorted order, so each split file
+            # covers a contiguous sort-column range → discriminating stats
+            writer = writer.option("maxRecordsPerFile", max_file_rows)
+        # writer-unique commit dir: concurrent writers (or a retried
+        # attempt after a lost commit race) can never clobber each other's
+        # committed data files; losers leave orphan dirs for sweep
+        commit_dir = f"data/c{snap['snapshot_id'] + 1}-{uuid.uuid4().hex[:8]}"
+        out_path = os.path.join(self.path, commit_dir)
+        writer.parquet(out_path)
+        t_written = _time.time()
         paths = glob.glob(os.path.join(out_path, "_bucket=*", "*.parquet"))
-        key = self.key
+        key, schema_v = self.key, snap["schema_version"]
         # per-column bounds for general data skipping (the Iceberg
         # "column metrics" analog): every primitive payload column whose
         # footer stats are JSON-safe gets [min, max] in the manifest, so a
@@ -1599,7 +1627,37 @@ class IceboxTable:
 
         with ThreadPoolExecutor(max_workers=16) as ex:
             files = list(ex.map(entry, paths))
+        if phase_t is not None:
+            phase_t["write_sec"] = round(t_written - since, 3)
+            phase_t["footer_sec"] = round(_time.time() - t_written, 3)
         return files, sum(e["rows"] for e in files)
+
+    def _retrying(self, conflict_retries: int, once, *args, **kwargs) -> dict:
+        """The optimistic-commit loop of merge, compact and rebucket: run
+        ``once`` against the loaded snapshot; after a lost commit race,
+        reload the table state and recompute, up to ``conflict_retries``
+        times, then re-raise the last ``CommitConflictError``."""
+        last_err: CommitConflictError | None = None
+        for attempt in range(conflict_retries + 1):
+            if attempt:
+                self.refresh()
+            try:
+                return once(*args, **kwargs)
+            except CommitConflictError as exc:
+                last_err = exc
+        raise last_err
+
+    def _folded(
+        self, snap: dict, entries: list[dict], n_buckets: int, *, drop_tombstones: bool
+    ) -> DataFrame:
+        """compact's and rebucket's rewrite input: the manifest slice
+        resolved to one row per key (merge-on-read deltas folded into
+        their base), tombstones dropped when ``drop_tombstones``, tagged
+        with its ``_bucket`` under ``n_buckets``."""
+        df = self._resolved(snap, entries)
+        if drop_tombstones:
+            df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+        return df.withColumn("_bucket", bucket_expr(self.key, n_buckets))
 
     # ---------------- maintenance ----------------
 
@@ -1644,18 +1702,11 @@ class IceboxTable:
         if a merge touches one of the buckets being folded first, this
         compaction loses the race, reloads the new state and recomputes
         (up to ``conflict_retries`` times); the merge is never lost."""
-        last_err: CommitConflictError | None = None
-        for attempt in range(conflict_retries + 1):
-            if attempt:
-                self.refresh()
-            try:
-                return self._compact_once(
-                    drop_tombstones=drop_tombstones, max_buckets=max_buckets,
-                    cluster_by=cluster_by, max_file_rows=max_file_rows,
-                )
-            except CommitConflictError as exc:
-                last_err = exc
-        raise last_err
+        return self._retrying(
+            conflict_retries, self._compact_once,
+            drop_tombstones=drop_tombstones, max_buckets=max_buckets,
+            cluster_by=cluster_by, max_file_rows=max_file_rows,
+        )
 
     def _compact_once(
         self,
@@ -1699,13 +1750,9 @@ class IceboxTable:
         deferred = 0
         if max_buckets is not None and len(todo) > max_buckets:
             # worst-first: fold the buckets with the deepest file stacks
-            all_todo = set(todo)
-            todo = sorted(
-                sorted(todo, key=lambda b: len(by_bucket[b]), reverse=True)[
-                    :max_buckets
-                ]
-            )
-            deferred = len(all_todo - set(todo))
+            deferred = len(todo) - max_buckets
+            worst = sorted(todo, key=lambda b: len(by_bucket[b]), reverse=True)
+            todo = sorted(worst[:max_buckets])
         if not todo:
             return {
                 "compacted_buckets": 0,
@@ -1714,41 +1761,22 @@ class IceboxTable:
             }
 
         entries = [e for b in todo for e in by_bucket[b]]
-        df = self._read_manifest(snap, entries, with_seq=True)
-        if any(e.get("kind") == "delta" for e in entries):
-            df = self._resolve_lww(df)  # fold merge-on-read deltas into base
-        if drop_tombstones:
-            df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        df = df.withColumn("_bucket", bucket_expr(self.key, self.n_buckets))
-        # writer-unique commit dir: concurrent writers (or a retried
-        # attempt after a lost commit race) can never clobber each other's
-        # committed data files; losers leave orphan dirs for sweep
-        commit_dir = f"data/c{snap['snapshot_id'] + 1}-{uuid.uuid4().hex[:8]}"
-        out_path = os.path.join(self.path, commit_dir)
+        df = self._folded(snap, entries, self.n_buckets, drop_tombstones=drop_tombstones)
         # cluster within each bucket (default: by key, so point lookups get
         # tight row-group/file key ranges; cluster_by switches the sort
         # order to a stat column for range-scan file skipping instead; a
         # LIST of 2+ numeric columns interleaves them on a Z-order curve,
         # bounding every file's range in EVERY listed dimension — a
         # lexicographic sort only discriminates its leading column)
-        if isinstance(cluster_by, (list, tuple)) and len(cluster_by) > 1:
-            sort_expr = self._zorder_expr(df, list(cluster_by))
-        elif isinstance(cluster_by, (list, tuple)):
-            sort_expr = F.col(cluster_by[0])
-        else:
-            sort_expr = F.col(cluster_by if cluster_by is not None else self.key)
-        writer = (
-            df.repartition(self.n_buckets, F.col(self.key))
-            .sortWithinPartitions("_bucket", sort_expr)
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
+        cols = (
+            list(cluster_by) if isinstance(cluster_by, (list, tuple))
+            else [cluster_by if cluster_by is not None else self.key]
         )
-        if max_file_rows is not None:
-            # task output is written in sorted order, so each split file
-            # covers a contiguous sort-column range → discriminating stats
-            writer = writer.option("maxRecordsPerFile", max_file_rows)
-        writer.parquet(out_path)
-        files_written, _ = self._register_files(out_path, snap["schema_version"])
+        sort_expr = self._zorder_expr(df, cols) if len(cols) > 1 else F.col(cols[0])
+        files_written, _ = self._write_buckets(
+            df.repartition(self.n_buckets, F.col(self.key)), snap,
+            sort_by=sort_expr, max_file_rows=max_file_rows,
+        )
         metrics = {
             "compacted_buckets": len(todo),
             "files_before": len(snap["manifest"]),
@@ -1882,15 +1910,7 @@ class IceboxTable:
         commit order — the loser reloads the new layout and recomputes.
         Readers pinned at older snapshots still materialize the old layout
         (time travel folds the commit log, n_buckets travels with it)."""
-        last_err: CommitConflictError | None = None
-        for attempt in range(conflict_retries + 1):
-            if attempt:
-                self.refresh()
-            try:
-                return self._rebucket_once(new_n_buckets)
-            except CommitConflictError as exc:
-                last_err = exc
-        raise last_err
+        return self._retrying(conflict_retries, self._rebucket_once, new_n_buckets)
 
     def _rebucket_once(self, new_n_buckets: int) -> dict:
         if new_n_buckets < 1:
@@ -1899,24 +1919,15 @@ class IceboxTable:
         old_nb = snap["n_buckets"]
         if new_n_buckets == old_nb:
             return {"rebucketed": False, "n_buckets": old_nb}
-        entries = snap["manifest"]
-        df = self._read_manifest(snap, entries, with_seq=True)
-        if any(e.get("kind") == "delta" for e in entries):
-            df = self._resolve_lww(df)  # fold MOR deltas while rewriting anyway
-        if not snap.get("unordered_mode", False):
+        df = self._folded(
+            snap, snap["manifest"], new_n_buckets,
             # fenced delivery: tombstones are foldable exactly as in compact
-            df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        df = df.withColumn("_bucket", bucket_expr(self.key, new_n_buckets))
-        commit_dir = f"data/c{snap['snapshot_id'] + 1}-{uuid.uuid4().hex[:8]}"
-        out_path = os.path.join(self.path, commit_dir)
-        (
-            df.repartition(new_n_buckets, F.col(self.key))
-            .sortWithinPartitions("_bucket", self.key)
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(out_path)
+            drop_tombstones=not snap.get("unordered_mode", False),
         )
-        files_written, rows_out = self._register_files(out_path, snap["schema_version"])
+        files_written, rows_out = self._write_buckets(
+            df.repartition(new_n_buckets, F.col(self.key)), snap,
+            sort_by=F.col(self.key),
+        )
         # every bucket of the NEW layout has logically applied everything up
         # to the global fence (the rewrite is a snapshot of that state), so
         # per-bucket lineage is floored at the carried global LSN — without
@@ -1926,9 +1937,8 @@ class IceboxTable:
         glob_lsn = int(snap["lineage"]["last_applied_lsn"])
         per_bucket: dict[str, int] = {str(b): glob_lsn for b in range(new_n_buckets)}
         for e in files_written:
-            if "seq_max" in e:
-                b = str(e["bucket"])
-                per_bucket[b] = max(per_bucket.get(b, glob_lsn), int(e["seq_max"]))
+            b = str(e["bucket"])
+            per_bucket[b] = max(per_bucket[b], int(e.get("seq_max", glob_lsn)))
         metrics = {
             "rebucketed": True,
             "n_buckets_before": old_nb,
@@ -2023,6 +2033,15 @@ class IceboxTable:
             what COW would rewrite (< 1/8, the write-amplification
             threshold) goes MOR; otherwise COW keeps reads cheap.
 
+        Every strategy runs one plan (``merge_plan`` reads
+        ``aligned-single-shuffle``, plus ``+auto-cow``/``+auto-mor`` in
+        cost-based mode): the LWW input is hash-repartitioned to the bucket
+        layout — the batch's one payload shuffle — and a single
+        ``max_by`` aggregation resolves it, so each task writes exactly
+        its own bucket. A hot key's events all meet on its bucket's task;
+        for adversarial skew, pre-collapse the batch with the salted
+        two-phase ``dedup.lww_dedup`` (``salted=True``).
+
         Delivery-order contract: with ``fence=True`` (batch engine) the
         caller feeds monotone LSN ranges and events at or below the global
         checkpoint are dropped; COW deletes may then be physical. With
@@ -2037,20 +2056,13 @@ class IceboxTable:
 
         if stage is not None and not re.fullmatch(r"[A-Za-z0-9._-]+", stage):
             raise ValueError(f"invalid stage id {stage!r} (want [A-Za-z0-9._-]+)")
-        last_err: CommitConflictError | None = None
-        for attempt in range(conflict_retries + 1):
-            if attempt:
-                self.refresh()
-            try:
-                return self._merge_once(
-                    updates, batch_id, seq_col=seq_col, op_col=op_col,
-                    delete_value=delete_value, fence=fence,
-                    tombstones=tombstones, ts_col=ts_col, mor=mor,
-                    stage=stage, probe_stats=probe_stats,
-                )
-            except CommitConflictError as exc:
-                last_err = exc
-        raise last_err
+        return self._retrying(
+            conflict_retries, self._merge_once,
+            updates, batch_id, seq_col=seq_col, op_col=op_col,
+            delete_value=delete_value, fence=fence,
+            tombstones=tombstones, ts_col=ts_col, mor=mor,
+            stage=stage, probe_stats=probe_stats,
+        )
 
     def _merge_once(
         self,
@@ -2129,96 +2141,59 @@ class IceboxTable:
         )
         ups = ups.withColumn("_bucket", bucket_expr(key, nb))
 
-        # cost-based skew strategy from the probe's per-bucket histogram:
-        # balanced batches use the aligned single payload shuffle; a hot
-        # bucket (hot doc_id) instead goes through partial+final
-        # aggregation, whose map-side combine collapses the hot key inside
-        # every input partition BEFORE the shuffle (the salted-repartition
-        # effect), then only the small winner set is repartitioned to the
-        # bucket layout for the write
-        counts = [n for n, _ in touched.values()]
-        skewed = (
-            len(counts) > 1 and max(counts) > 4 * (sum(counts) / len(counts))
-        )
-        merge_plan = "skew-partial-agg" if skewed else "aligned-single-shuffle"
-
+        applied = sum(n for n, _ in touched.values())
+        merge_plan = "aligned-single-shuffle"
         if mor is None:
             # cost-based mode: compare batch size against what COW would
             # rewrite (live rows of touched buckets, known from the
             # manifest — no extra IO). Small batch on a big table → MOR.
-            batch_rows = sum(counts)
             touched_live = sum(
                 e["rows"] for e in snap["manifest"] if e["bucket"] in touched
             )
-            mor = touched_live > 0 and batch_rows * 8 < touched_live
+            mor = touched_live > 0 and applied * 8 < touched_live
             merge_plan += "+auto-mor" if mor else "+auto-cow"
 
         files_written: list[dict] = []
         rows_out = 0
+        if touched:
+            # 3. the LWW input: merge-on-read resolves the batch alone;
+            #    copy-on-write also reads ONLY the touched target buckets
+            src = ups
+            if not mor:
+                tgt_entries = [e for e in snap["manifest"] if e["bucket"] in touched]
+                tgt = self._read_manifest(snap, tgt_entries, with_seq=True)
+                tgt = tgt.select(
+                    *payload_cols,
+                    SEQ_COL,
+                    F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit(delete_value))
+                    .otherwise(F.lit("upsert"))
+                    .alias("_op"),
+                )
+                src = tgt.withColumn("_bucket", bucket_expr(key, nb)).unionByName(ups)
 
-        if touched and mor:
-            # merge-on-read: LWW within the batch only, tombstones retained
-            # so deltas mask older base rows; the single payload shuffle is
-            # the bucket-aligned repartition (same trick as COW)
-            if skewed:
-                deduped = lww_dedup(ups, key=key, seq=SEQ_COL).repartition(nb, F.col(key))
-            else:
-                deduped = lww_dedup(ups.repartition(nb, F.col(key)), key=key, seq=SEQ_COL)
-            deduped = deduped.withColumn(
-                DELETED_COL, F.col("_op") == F.lit(delete_value)
-            ).drop("_op")
-            commit_dir = f"data/c{snap['snapshot_id'] + 1}-{uuid.uuid4().hex[:8]}"
-            out_path = os.path.join(self.path, commit_dir)
-            deduped.write.partitionBy("_bucket").mode("overwrite").parquet(out_path)
-            phase_t["write_sec"] = round(_time.time() - _t0, 3)
-            _t0 = _time.time()
-            files_written, rows_out = self._register_files(
-                out_path, snap["schema_version"], kind="delta"
-            )
-            phase_t["footer_sec"] = round(_time.time() - _t0, 3)
-        elif touched:
-            # 3. read ONLY touched buckets of the target
-            tgt_entries = [e for e in snap["manifest"] if e["bucket"] in touched]
-            tgt = self._read_manifest(snap, tgt_entries, with_seq=True)
-            tgt = tgt.select(
-                *payload_cols,
-                SEQ_COL,
-                F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit(delete_value))
-                .otherwise(F.lit("upsert"))
-                .alias("_op"),
-            )
-            tgt = tgt.withColumn("_bucket", bucket_expr(key, nb))
-
-            # 4. LWW across target ∪ updates; deletes drop out physically
-            #    (fence mode) or persist as tombstones (unordered mode).
-            #    The explicit repartition is THE single payload shuffle:
-            #    bucket_expr == Spark's partition function, so it satisfies
-            #    both the aggregation's distribution (no second exchange)
-            #    and the partitionBy file layout (each task owns one bucket)
-            combined = tgt.unionByName(ups)
-            if skewed:
-                merged = lww_dedup(combined, key=key, seq=SEQ_COL).repartition(nb, F.col(key))
-            else:
-                merged = lww_dedup(combined.repartition(nb, F.col(key)), key=key, seq=SEQ_COL)
-            if tombstones:
-                merged = merged.withColumn(
+            # 4. LWW. The explicit repartition is THE single payload
+            #    shuffle: bucket_expr == Spark's partition function, so it
+            #    satisfies both the aggregation's distribution (no second
+            #    exchange) and the partitionBy file layout (each task owns
+            #    one bucket). Deletes persist as tombstones in merge-on-read
+            #    deltas (they mask older base rows) and in unordered mode;
+            #    a fenced copy-on-write merge drops them physically.
+            out = lww_dedup(src.repartition(nb, F.col(key)), key=key, seq=SEQ_COL)
+            if mor or tombstones:
+                out = out.withColumn(
                     DELETED_COL, F.col("_op") == F.lit(delete_value)
                 ).drop("_op")
             else:
-                merged = (
-                    merged.where(F.col("_op") != F.lit(delete_value))
+                out = (
+                    out.where(F.col("_op") != F.lit(delete_value))
                     .drop("_op")
                     .withColumn(DELETED_COL, F.lit(False))
                 )
 
-            # 5. copy-on-write: rewrite touched buckets into a new commit dir
-            commit_dir = f"data/c{snap['snapshot_id'] + 1}-{uuid.uuid4().hex[:8]}"
-            out_path = os.path.join(self.path, commit_dir)
-            merged.write.partitionBy("_bucket").mode("overwrite").parquet(out_path)
-            phase_t["write_sec"] = round(_time.time() - _t0, 3)
-            _t0 = _time.time()
-            files_written, rows_out = self._register_files(out_path, snap["schema_version"])
-            phase_t["footer_sec"] = round(_time.time() - _t0, 3)
+            # 5. write the touched buckets (COW) or their deltas (MOR)
+            files_written, rows_out = self._write_buckets(
+                out, snap, kind="delta" if mor else None, phase_t=phase_t, since=_t0
+            )
 
         # 6. lineage: per-bucket + global LSN, committed atomically with
         #    the data as a bucket-granular delta (O(touched buckets) commit
@@ -2226,7 +2201,7 @@ class IceboxTable:
         metrics = {
             "batch_id": batch_id,
             "skipped": False,
-            "applied_events": sum(n for n, _ in touched.values()),
+            "applied_events": applied,
             "merge_plan": merge_plan,
             "per_bucket_applied": {str(b): n for b, (n, _) in sorted(touched.items())},
             "touched_buckets": sorted(touched),

@@ -74,6 +74,15 @@ def test_truncated_wal_with_explicit_watermark_matches_full_replay(
     assert _state(eng.table) == fx["ref_state"]
     boots = [r for r in eng.metrics.records if r.get("kind") == "bootstrap"]
     assert len(boots) == 1 and boots[0]["watermark_lsn"] == CUT
+    assert set(boots[0]) == {
+        "emitted_at", "kind", "watermark_lsn", "schema_changes",
+        "quarantined_rows", "duration_sec",
+        # the dump's copy-on-write merge metrics
+        "batch_id", "skipped", "applied_events", "merge_plan",
+        "per_bucket_applied", "touched_buckets", "files_written",
+        "rows_written", "bytes_written", "max_event_ts", "probe_sec",
+        "write_sec", "footer_sec", "total_bytes", "total_rows",
+    }
     # no planned range touches the fenced region
     assert all(r["lo"] >= CUT for r in eng.metrics.records if r.get("kind") == "batch")
 

@@ -66,8 +66,9 @@ def test_malformed_events_are_quarantined_not_applied(spark, tmp_path):
     assert "batch" in q.columns  # partition column names the parking batch
     batch_recs = [r for r in eng.metrics.records if r.get("kind") == "batch"]
     assert sum(r.get("quarantined_rows", 0) for r in batch_recs) == 3
-    assert any(r.get("kind") == "dlq" and r["reason"] == "null-seq"
-               for r in eng.metrics.records)
+    dlq_recs = [r for r in eng.metrics.records if r.get("kind") == "dlq"]
+    assert [set(r) for r in dlq_recs] == [{"emitted_at", "kind", "reason", "rows"}]
+    assert dlq_recs[0]["reason"] == "null-seq" and dlq_recs[0]["rows"] == 1
 
 
 def test_crash_replay_does_not_duplicate_dlq_rows(spark, tmp_path):

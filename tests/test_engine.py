@@ -53,7 +53,7 @@ def test_full_run_matches_oracle_and_emits_metrics(spark, tmp_path):
     oracle.assert_table_equal(eng.read_table().toPandas(), expected)
     assert totals["batches"] == 4
     assert totals["applied_events"] > 0 and totals["events_per_sec"] > 0
-    batch0 = eng.metrics.records[0]
+    batch0 = next(r for r in eng.metrics.records if r["kind"] == "batch")
     assert batch0["per_bucket_applied"] and batch0["watermark_lag_sec"] is not None
 
 

@@ -215,18 +215,16 @@ def test_streaming_tombstones_compaction(spark, tmp_path):
 
 
 def test_skew_plan_selection_and_equivalence(spark, tmp_path):
-    """A hot-key batch triggers the partial-agg merge plan; a balanced one
-    uses the aligned single shuffle. Both converge to the oracle state."""
+    """A 60%-hot-key batch and a balanced one both converge to the oracle
+    state through the merge's one LWW plan."""
     hot = generate_changelog(spark, 4_000, 300, seed=19, hot_key_pct=60)
     t1 = IceboxTable.create(spark, str(tmp_path / "hot"), SCHEMA_V1, n_buckets=8)
-    m_hot = t1.merge(hot, "b1")
-    assert m_hot["merge_plan"] == "skew-partial-agg"
+    t1.merge(hot, "b1")
     oracle.assert_table_equal(t1.read().toPandas(), oracle.replay(hot.toPandas()))
 
     flat = generate_changelog(spark, 4_000, 300, seed=19, hot_key_pct=0)
     t2 = IceboxTable.create(spark, str(tmp_path / "flat"), SCHEMA_V1, n_buckets=8)
-    m_flat = t2.merge(flat, "b1")
-    assert m_flat["merge_plan"] == "aligned-single-shuffle"
+    t2.merge(flat, "b1")
     oracle.assert_table_equal(t2.read().toPandas(), oracle.replay(flat.toPandas()))
 
 

@@ -69,6 +69,10 @@ def test_bucket_expr_matches_spark_partition_id(spark):
 
 
 def test_merge_plan_single_payload_exchange(spark, tmp_path):
+    """The DataFrame that merge hands its bucket writer holds exactly ONE
+    exchange — the bucket-aligned repartition also serves the LWW
+    aggregation — for a balanced batch, a 60%-hot-key batch and a
+    merge-on-read batch alike."""
     schema = T.StructType([
         T.StructField("doc_id", T.StringType()),
         T.StructField("tokens", T.ArrayType(T.IntegerType())),
@@ -76,29 +80,28 @@ def test_merge_plan_single_payload_exchange(spark, tmp_path):
         T.StructField("source", T.StringType()),
     ])
     tbl = IceboxTable.create(spark, str(tmp_path / "t"), schema, n_buckets=8)
+    written = []
+    real = tbl._write_buckets
+
+    def recording(df, *a, **kw):
+        written.append(df)
+        return real(df, *a, **kw)
+
+    tbl._write_buckets = recording
     log = generate_changelog(spark, 5_000, 400, seed=2)
+    hot = generate_changelog(spark, 4_000, 300, seed=19, hot_key_pct=60)
     tbl.merge(log.where(F.col("seq") <= 2_500), "b1")
+    tbl.merge(log.where(F.col("seq") > 2_500), "b2")
+    tbl.merge(hot.withColumn("seq", F.col("seq") + 5_000), "hot")
+    tbl.merge(hot.withColumn("seq", F.col("seq") + 9_000), "mor", mor=True)
+    assert len(written) == 4
 
-    # reconstruct the merge's write-side plan the same way merge() does
-    from sparkcdc.dedup import lww_dedup
-    from sparkcdc.icebox import SEQ_COL
-
-    ups = log.where(F.col("seq") > 2_500).select(
-        "doc_id", "tokens", "n_tok", "source",
-        F.col("seq").cast("long").alias(SEQ_COL), F.col("op").alias("_op"),
-    ).withColumn("_bucket", bucket_expr("doc_id", 8))
-    tgt = tbl.read(with_seq=True).select(
-        "doc_id", "tokens", "n_tok", "source", SEQ_COL, F.lit("upsert").alias("_op")
-    ).withColumn("_bucket", bucket_expr("doc_id", 8))
-    merged = lww_dedup(
-        tgt.unionByName(ups).repartition(8, F.col("doc_id")), seq=SEQ_COL
-    ).where(F.col("_op") != "delete")
-
-    plan = _plan(merged, "simple")  # simple mode: one line per operator
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges == 1, f"expected exactly 1 exchange, plan:\n{plan}"
-    # and the aggregation reuses the explicit repartitioning
-    assert "REPARTITION_BY_NUM" in plan or "RoundRobin" not in plan
+    for df in written[1:]:
+        plan = _plan(df, "simple")  # simple mode: one line per operator
+        n_exchanges = plan.count("Exchange")
+        assert n_exchanges == 1, f"expected exactly 1 exchange, plan:\n{plan}"
+        # and the aggregation reuses the explicit repartitioning
+        assert "REPARTITION_BY_NUM" in plan or "RoundRobin" not in plan
 
 
 def test_coercion_is_single_project_no_udf(spark):

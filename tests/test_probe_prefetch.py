@@ -169,3 +169,27 @@ def test_prefetch_drops_off_grid_batch_index(spark, tmp_path):
                     batch_size=1_000, n_buckets=2)
     eng = CDCEngine(spark, cfg, log_df=log)
     assert eng._prefetch_probe_stats([(0, 1_000), (1_000, 2_000)]) == {}
+
+
+def test_prefetch_emits_one_record_outside_totals(spark, tmp_path):
+    """A prefetching run emits exactly one ``prefetch`` record with a
+    pinned field set; it is not a commit, so ``metrics.totals()`` equals
+    what the batch records alone give."""
+    from sparkcdc.metrics import MetricsLog
+
+    wal = os.path.join(tmp_path, "wal")
+    _write_wal(spark, wal, seed=17)
+    eng = CDCEngine(spark, JobConfig(
+        log_path=wal, table_path=os.path.join(tmp_path, "t"),
+        batch_size=3_500, n_buckets=8,
+    ))
+    totals = eng.run()
+    recs = eng.metrics.records
+    pre = [r for r in recs if r["kind"] == "prefetch"]
+    assert len(pre) == 1
+    assert set(pre[0]) == {"emitted_at", "kind", "batches", "rows", "duration_sec"}
+    assert pre[0]["batches"] == totals["batches"] == 4
+    assert 4 <= pre[0]["rows"] <= 4 * 8 and pre[0]["duration_sec"] > 0
+    without = MetricsLog()
+    without.records = [r for r in recs if r["kind"] != "prefetch"]
+    assert without.totals() == totals

@@ -454,6 +454,13 @@ def test_engine_quarantine_drops_bad_batch_and_continues(spark, tmp_path):
     quarantined = [r for r in eng.metrics.records if r["kind"] == "batch-quarantined"]
     assert len(quarantined) == 1
     assert quarantined[0]["lo"] == 1_000
+    # the commit-record shape around the aborted audit's report
+    assert set(quarantined[0]) == {
+        "emitted_at", "kind", "lo", "hi", "range_width", "schema_changes",
+        "quarantined_rows", "batch_id", "skipped", "reason", "audit",
+        "duration_sec", "events_per_sec", "per_bucket_events_per_sec",
+        "watermark_lag_sec", "range_per_sec",
+    }
     assert not quarantined[0]["audit"]["results"]["token_invariant"]["ok"]
     # final state = replay WITHOUT the quarantined slice's events
     kept = spark.read.parquet(log_path).where(

@@ -1,13 +1,13 @@
-"""Round-6 per-query profiler: noop-sink isolated timing + plan capture.
+"""Per-query profiler: noop-sink isolated timing + plan capture.
 
 Usage:
-    python tools/profile_r06.py <tag> [query ...]
+    python tools/profile_queries.py <tag> [query ...]
 
 Runs each named declared query (from __spark_entry__.queries()) against
 $SPARK_GRAFT_SF_DIR (default sf0.1) with the noop sink (guide §1.4), REPS
 times (SPARK_GRAFT_BENCH_REPS, default 3), records wall medians + the
 noise-insensitive stage counters (same protocol as bench.py), and writes
-the formatted physical plan to plans/r06/<query>_<tag>.txt.
+the formatted physical plan to plans/<tag>/<query>.txt.
 
 This is a measurement tool only — bench.py stays frozen.
 """
@@ -20,7 +20,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import StageCounters  # noqa: E402  (frozen harness reused read-only)
 
@@ -46,7 +47,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
+    plans_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(plans_dir, exist_ok=True)
 
     out: dict[str, dict] = {}
@@ -57,7 +58,7 @@ def main() -> int:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         walls = []
         rows = None
