@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
-from .derived import IncrementalIndex, advance_pin, change_window
+from .derived import IncrementalIndex
 from .icebox import IceboxTable
 
 _META_NAME = "aggview.json"
@@ -198,10 +198,6 @@ class AggView(IncrementalIndex):
             {k: (v[0], v[1]) for k, v in meta["aggs"].items()},
         )
 
-    @staticmethod
-    def table_exists(path: str) -> bool:
-        return IceboxTable.exists(path)
-
     # ---------------- incremental maintenance ----------------
 
     def _minmax_specs(self):
@@ -290,9 +286,15 @@ class AggView(IncrementalIndex):
         # values (the exact corruption _evolve_with_source exists to stop)
         src_table.refresh()
         self._evolve_with_source(src_table)
-        from_sid, to_sid, ch = change_window(src_table, consumer=consumer, mode="cdf")
-        if ch is None:
-            return {"skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid}
+        return self._fold(
+            src_table, consumer=consumer, mode="cdf",
+            rows=lambda ch, to_sid: self._delta_rows(src_table, ch, to_sid),
+        )
+
+    def _delta_rows(self, src_table: IceboxTable, ch: DataFrame, to_sid: int):
+        """The window's IVM step: fold the CDF ``ch`` into the stored
+        state of the dirty groups — upserts for groups still live, deletes
+        for groups whose live count reached zero."""
         gcols = self.group_cols
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
@@ -388,26 +390,10 @@ class AggView(IncrementalIndex):
             _GK, *gcols, *[vals[c].alias(c) for c in payload_cols if c not in gcols]
         )
         ups = rows.where(F.col(_N) > 0).select(
-            F.lit("upsert").alias("_change"), _GK, *payload_cols,
-            F.lit(to_sid).cast("long").alias("_seq"),
+            F.lit("upsert").alias("_change"), _GK, *payload_cols
         )
-        nulls = [
-            F.lit(None).cast(self.table.schema[c].dataType).alias(c)
-            for c in payload_cols
-        ]
-        dels = rows.where(F.col(_N) <= 0).select(
-            F.lit("delete").alias("_change"), _GK, *nulls,
-            F.lit(to_sid).cast("long").alias("_seq"),
-        )
-        m = self.table.merge(
-            ups.unionByName(dels),
-            batch_id=f"{consumer}:{from_sid}->{to_sid}",
-            seq_col="_seq", op_col="_change", delete_value="delete",
-            fence=False, tombstones=True, mor=None,
-        )
-        advance_pin(src_table, consumer, from_sid, to_sid)
-        m = self._compact_if_needed(m)
-        return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
+        emptied = rows.where(F.col(_N) <= 0).select(_GK)
+        return ups.unionByName(self._tombstones(emptied))
 
     # ---------------- query ----------------
 

@@ -234,10 +234,6 @@ class NgramIndex(IncrementalIndex):
         meta = json.loads(table._store.get(_META_NAME))
         return cls(spark, table, n=int(meta["n"]))
 
-    @staticmethod
-    def table_exists(path: str) -> bool:
-        return IceboxTable.exists(path)
-
     # ---------------- incremental maintenance ----------------
 
     def refresh_from(

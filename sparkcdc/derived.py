@@ -2,25 +2,38 @@
 change feed (SignatureIndex, SimhashIndex, NgramIndex, VectorIndex,
 PackedTable, AggView) and of user-defined sinks fed the same way.
 
-Every consumer follows one discipline:
+Every built-in consumer refreshes through ONE fold,
+``IncrementalIndex._fold``, built on the public ``consume_changes``; a
+table supplies only the rows to merge:
 
   change_window(consumer)                   -- pinned read_changes window
-    → derive / fold the changed rows only   -- O(batch)
-    → MERGE, batch id = (from, to) pair     -- exactly-once under replay
+    → rows(changes)                         -- the table's part, O(batch)
+    → MERGE, _seq = to, id = consumer:from->to  -- exactly-once under replay
     → advance_pin                           -- pin released
     → too_many_deltas → compact             -- bounded read amplification
 
 The source table's consumer registry pins the from-snapshot, so
 expiration can never break a consumer's incremental reader, and a crash
 between the MERGE and the pin advance replays the same window as a fenced
-no-op.
+no-op. A bootstrap onto a source whose empty snapshot 0 has expired has
+no from-snapshot: its window is the full state at ``to``, and that
+snapshot is pinned under the reserved provisional name
+``<consumer>#bootstrap`` BEFORE the merge. ``advance_pin`` swaps it for
+the real pin, so a crash in between re-reads the same window (fenced)
+rather than folding a newer full state over the first one.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .icebox import IceboxTable
+
+
+# suffix of the provisional pin a bootstrap-onto-expired window holds
+# until its merge is durable (reserved: no consumer name may end with it)
+BOOTSTRAP_PIN = "#bootstrap"
 
 
 def change_window(
@@ -29,27 +42,38 @@ def change_window(
     """Consumer-pinned change window: ``(from_sid, to_sid, changes)``.
 
     ``changes is None`` means up to date (nothing to fold);
-    ``from_sid is None`` means bootstrap-onto-expired — the caller must
-    register the consumer only AFTER its merge is durable (a crash in
-    between just redoes the bootstrap; LWW makes the re-merge a
-    harmless rewrite). ``mode`` is passed through to ``read_changes``
-    ("net" or "cdf"); the bootstrap slice is shaped to match."""
+    ``from_sid is None`` means bootstrap-onto-expired: ``changes`` is the
+    full source state at ``to_sid``, a snapshot held by the provisional
+    pin ``<consumer>#bootstrap`` until ``advance_pin``. A retry after a
+    crash between the caller's merge and the pin returns that SAME window
+    again, so a merge keyed by the (from, to) pair is a fenced no-op —
+    re-merging a newer full state would fold the bootstrap twice (an
+    aggregate double-counts; an LWW index keeps rows deleted since).
+    ``mode`` is passed through to ``read_changes`` ("net" or "cdf"); the
+    bootstrap slice is shaped to match."""
     to_sid = src_table.refresh()["snapshot_id"]
     regs = src_table.consumers()
+    provisional = consumer + BOOTSTRAP_PIN
     if consumer in regs:
+        if provisional in regs:  # crash inside advance_pin's swap
+            src_table.deregister_consumer(provisional)
         from_sid = regs[consumer]
         if from_sid == to_sid:
             return from_sid, to_sid, None
         return from_sid, to_sid, src_table.read_changes(from_sid, to_sid, mode=mode)
-    if 0 in src_table._history_ids():
+    if provisional in regs:
+        to_sid = regs[provisional]  # replay the pinned bootstrap window
+    elif 0 in src_table._history_ids():
         # bootstrap: snapshot 0 is the empty created table, so the
         # first refresh indexes the whole current corpus as "changes"
         from_sid = src_table.register_consumer(consumer, 0)
         if from_sid == to_sid:
             return from_sid, to_sid, None
         return from_sid, to_sid, src_table.read_changes(from_sid, to_sid, mode=mode)
+    else:
+        src_table.register_consumer(provisional, to_sid)
     # bootstrap onto a table whose empty snapshot is already expired:
-    # the full current state IS the change set (every visible row as
+    # the full state at to_sid IS the change set (every visible row as
     # an insert/upsert at its own LSN).
     tag = F.lit("insert").alias("_change_type") if mode == "cdf" else (
         F.lit("upsert").alias("_change")
@@ -59,10 +83,12 @@ def change_window(
 
 
 def advance_pin(src_table: IceboxTable, consumer: str, from_sid, to_sid: int) -> None:
-    """Move ``consumer``'s pin to ``to_sid`` once its window is durable
-    (registering it on a bootstrap-onto-expired window)."""
+    """Move ``consumer``'s pin to ``to_sid`` once its window is durable. A
+    bootstrap-onto-expired window (``from_sid is None``) registers the
+    consumer, then drops its provisional pin."""
     if from_sid is None:
         src_table.register_consumer(consumer, to_sid)
+        src_table.deregister_consumer(consumer + BOOTSTRAP_PIN)
     else:
         src_table.advance_consumer(consumer, to_sid)
 
@@ -78,12 +104,13 @@ def too_many_deltas(table: IceboxTable, limit: int | None) -> bool:
 
 class IncrementalIndex:
     """Shared machinery for derived icebox tables maintained incrementally
-    from a source table's change feed: consumer-pinned window, a
-    subclass-supplied derivation over ONLY the changed rows, LWW MERGE
-    into the index, and exactly-once replay via a (from, to)-snapshot
-    batch id. Source rows the derivation cannot represent (too-short
-    docs, null vectors) are REMOVED from the index rather than stored
-    degenerate."""
+    from a source table's change feed. ``_fold`` is the one refresh path:
+    consumer-pinned window, the subclass's rows over ONLY the changed
+    rows, LWW MERGE into the table, and exactly-once replay via a
+    (from, to)-snapshot batch id. ``_refresh`` is its form for keyed
+    indexes over a per-row derivation: source rows the derivation cannot
+    represent (too-short docs, null vectors) are REMOVED from the index
+    rather than stored degenerate."""
 
     table: IceboxTable
 
@@ -94,67 +121,93 @@ class IncrementalIndex:
     # folding, read-time LWW resolution degrades as deltas stack up
     compact_delta_files: int = 32
 
+    @staticmethod
+    def table_exists(path: str) -> bool:
+        return IceboxTable.exists(path)
+
     def _compact_if_needed(self, m: dict) -> dict:
         if too_many_deltas(self.table, self.compact_delta_files):
             return {**m, "compacted": self.table.compact()}
         return m
+
+    def _tombstones(self, keys: DataFrame) -> DataFrame:
+        """Delete rows for the index keys in ``keys``: ``_change='delete'``,
+        the key, and every other column NULL at its stored type."""
+        key = self.table.key
+        return keys.select(
+            F.lit("delete").alias("_change"),
+            key,
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in self.table.schema.fields
+                if f.name != key
+            ],
+        )
+
+    def _fold(self, src_table: IceboxTable, *, consumer: str, mode: str, rows) -> dict:
+        """The one refresh path: fold ``consumer``'s window of the source's
+        change feed (``mode`` "net" or "cdf") into this table.
+        ``rows(changes, to_sid)`` is the table's only part — it returns the
+        rows to merge, ``(_change, key, payload...)`` with ``_change`` in
+        {upsert, delete}, or None when the window touches nothing here.
+        Skipped when the window is empty; otherwise MERGE, pin advance,
+        delta compaction, in that order."""
+        folded = []  # set once the window is non-empty
+
+        def apply(ch, from_sid, to_sid) -> dict:
+            folded.append(True)
+            batch = rows(ch, to_sid)
+            if batch is None:
+                return {}
+            # the merged rows' LWW seq is the WINDOW's target snapshot id,
+            # not the source rows' own seqs: refresh order is what must
+            # win. With row seqs, a rollback-restored row (lower seq than
+            # the stale stored version) would LOSE the merge and the table
+            # would keep the rolled-back value forever — the change feed
+            # emits such reversals (icebox.read_changes) and the monotone
+            # to_sid lets them land. Exactly-once is unchanged: the batch
+            # id is still the (from, to) snapshot pair.
+            return self.table.merge(
+                batch.withColumn("_seq", F.lit(int(to_sid)).cast("long")),
+                batch_id=f"{consumer}:{from_sid}->{to_sid}",
+                seq_col="_seq",
+                op_col="_change",
+                delete_value="delete",
+                fence=False,
+                tombstones=True,
+                # cost-based: a small steady-state refresh lands as MOR
+                # deltas (O(batch) write) instead of COW-rewriting its
+                # buckets; the bootstrap (batch ≈ table) goes copy-on-write
+                mor=None,
+            )
+
+        m = consume_changes(src_table, consumer, apply, mode=mode)
+        return self._compact_if_needed(m) if folded else m
 
     def _refresh(self, src_table: IceboxTable, *, consumer: str, derive) -> dict:
         """``derive(upserts) -> DataFrame`` maps changed source rows (the
         ``_change='upsert'`` slice of the feed, payload columns intact) to
         index payload rows keyed by the index key; rows it omits are
         deleted from the index. O(changed source buckets) end to end."""
-        from_sid, to_sid, ch = change_window(src_table, consumer=consumer)
-        if ch is None:
-            return {
-                "skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid,
-            }
         key = self.table.key
-        schema = self.table.schema
-        payload_cols = [f.name for f in schema.fields if f.name != key]
-        # the index row's LWW seq is the WINDOW's target snapshot id, not
-        # the source row's own seq (PackedTable's convention): refresh
-        # order is what must win. With row seqs, a rollback-restored row
-        # (lower seq than the stale indexed version) would LOSE the merge
-        # and the index would keep the rolled-back value forever — the
-        # change feed now emits such reversals (icebox.read_changes) and
-        # the monotone to_sid lets them land. Exactly-once is unchanged:
-        # the batch id is still the (from, to) snapshot pair.
-        win_seq = F.lit(int(to_sid)).cast("long").alias("_seq")
-        ups = ch.where(F.col("_change") == "upsert")
-        derived = derive(ups)
-        keyed = ups.select(key)
-        idx_up = keyed.join(derived, key).select(
-            F.lit("upsert").alias("_change"), key, *payload_cols, win_seq
-        )
-        nulls = [
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-            if f.name != key
-        ]
-        unrepresentable = keyed.join(derived.select(key), key, "left_anti")
-        removals = (
-            ch.where(F.col("_change") == "delete")
-            .select(key)
-            .unionByName(unrepresentable)
-            .select(F.lit("delete").alias("_change"), key, *nulls, win_seq)
-        )
-        m = self.table.merge(
-            idx_up.unionByName(removals),
-            batch_id=f"{consumer}:{from_sid}->{to_sid}",
-            seq_col="_seq",
-            op_col="_change",
-            delete_value="delete",
-            fence=False,
-            tombstones=True,
-            # cost-based: a small steady-state refresh lands as MOR deltas
-            # (O(batch) write) instead of COW-rewriting its buckets; the
-            # bootstrap (batch ≈ index) goes copy-on-write
-            mor=None,
-        )
-        advance_pin(src_table, consumer, from_sid, to_sid)
-        m = self._compact_if_needed(m)
-        return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
+
+        def rows(ch, to_sid) -> DataFrame:
+            payload_cols = [f.name for f in self.table.schema.fields if f.name != key]
+            ups = ch.where(F.col("_change") == "upsert")
+            derived = derive(ups)
+            keyed = ups.select(key)
+            idx_up = keyed.join(derived, key).select(
+                F.lit("upsert").alias("_change"), key, *payload_cols
+            )
+            unrepresentable = keyed.join(derived.select(key), key, "left_anti")
+            removals = (
+                ch.where(F.col("_change") == "delete")
+                .select(key)
+                .unionByName(unrepresentable)
+            )
+            return idx_up.unionByName(self._tombstones(removals))
+
+        return self._fold(src_table, consumer=consumer, mode="net", rows=rows)
 
 
 def consume_changes(
@@ -166,8 +219,8 @@ def consume_changes(
 ) -> dict:
     """The consumer-window machinery as a PUBLIC primitive: feed a
     user-defined downstream sink from the table's change feed with the
-    same discipline the built-in consumers (SignatureIndex, VectorIndex,
-    NgramIndex, PackedTable) use — the registry pins the from-snapshot
+    same discipline the built-in consumers use (every one folds through
+    it, via ``IncrementalIndex._fold``) — the registry pins the from-snapshot
     (expiration can never break the feed), the window is
     ``read_changes(from=last-synced)`` in ``mode`` ("net" or "cdf"), and
     the pin advances ONLY after ``apply_fn`` returns.

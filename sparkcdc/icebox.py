@@ -798,12 +798,15 @@ class IceboxTable:
         its new _seq), so downstream consumers can maintain aggregates
         incrementally (retract old, apply new) without re-reading the table.
 
-        Cost is O(changed buckets) in both modes: only buckets whose
-        manifest file set differs between the snapshots are read and
-        compared (state diff via a full outer join on the key within those
-        buckets) — an untouched 100 TB tail contributes nothing. Compaction-
-        only rewrites diff to empty, so consumers see logical changes, not
-        file churn."""
+        There is one diff: both modes run the same CDF full outer join on
+        the key, and ``net`` is a projection of it — preimages dropped,
+        ``delete`` rows kept as deletes (key and the last ``_seq`` visible
+        at from_snapshot, payload NULL), every other row an ``upsert``.
+
+        Cost is O(changed buckets): only buckets whose manifest file set
+        differs between the snapshots are read and compared — an untouched
+        100 TB tail contributes nothing. Compaction-only rewrites diff to
+        empty, so consumers see logical changes, not file churn."""
         if mode not in ("net", "cdf"):
             raise ValueError(f"mode must be 'net' or 'cdf', got {mode!r}")
         old_snap = self._snapshot_by_id(from_snapshot_id)
@@ -835,48 +838,28 @@ class IceboxTable:
                 *payload_cols, SEQ_COL
             )
 
-        key = self.key
-        old_state = visible_state(old_snap)
-        new_state = visible_state(new_snap)
+        cdf = self._cdf(visible_state(old_snap), visible_state(new_snap), payload_cols)
         if mode == "cdf":
-            return self._cdf(old_state, new_state, payload_cols)
-        o = old_state.select(
-            F.col(key).alias("_k"),
-            F.col(SEQ_COL).alias("_old_seq"),
-            F.struct(*payload_cols).alias("_old_payload"),
-        )
-        n = new_state.alias("n")
-        joined = n.join(o, F.col(f"n.{key}") == F.col("_k"), "full_outer")
-        # a key counts as changed when its seq DIFFERS (not only advances:
-        # a rollback restores the pre-update row at a LOWER seq, and that
-        # reversal must reach change-feed consumers — the self-heal
-        # contract) or, at an identical seq, when the payload differs (a
-        # corrected re-publish)
-        same_row = (F.col(f"n.{SEQ_COL}") == F.col("_old_seq")) & F.struct(
-            *[F.col(f"n.{c}") for c in payload_cols]
-        ).eqNullSafe(F.col("_old_payload"))
-        upserts = joined.where(
-            F.col(f"n.{key}").isNotNull()
-            & (F.col("_old_seq").isNull() | ~same_row)
-        ).select(F.lit("upsert").alias("_change"), *payload_cols, SEQ_COL)
-        # a delete's own LSN is not retained for physically-removed rows;
-        # _seq carries the last version that was visible at from_snapshot
-        deletes = joined.where(F.col(f"n.{key}").isNull()).select(
-            F.lit("delete").alias("_change"),
+            return cdf
+        # net = the CDF without preimages; a delete keeps its key and the
+        # last _seq visible at from_snapshot (a physically-removed row's
+        # own delete LSN is not retained), with its payload nulled
+        deleted = F.col("_change_type") == "delete"
+        return cdf.where(F.col("_change_type") != "update_preimage").select(
+            F.when(deleted, F.lit("delete"))
+            .otherwise(F.lit("upsert"))
+            .alias("_change"),
             *[
-                F.col("_k").alias(key)
-                if c == key
-                else F.lit(None).cast(current[c].dataType).alias(c)
+                F.col(c) if c == self.key else F.when(~deleted, F.col(c)).alias(c)
                 for c in payload_cols
             ],
-            F.col("_old_seq").alias(SEQ_COL),
+            SEQ_COL,
         )
-        return upserts.unionByName(deletes)
 
     def _cdf(
         self, old_state: DataFrame, new_state: DataFrame, payload_cols: list[str]
     ) -> DataFrame:
-        """Change-data-feed tail of read_changes(mode="cdf"): one full outer
+        """The one diff behind read_changes (both modes): one full outer
         join on the key, then each joined row emits 0-2 typed image structs
         (pre and/or post) which are compacted and exploded — a single pass,
         no re-scan of the join per change type."""
@@ -889,9 +872,11 @@ class IceboxTable:
         joined = n.join(o, F.col(f"n.{key}") == F.col(f"_o_{key}"), "full_outer")
         new_here = F.col(f"n.{key}").isNotNull()
         old_here = F.col(f"_o_{key}").isNotNull()
-        # seq-DIFFERS (not only advances) or payload-differs — see
-        # read_changes: a rollback's restored row sits at a LOWER seq and
-        # must still emit its pre/post image pair
+        # a key counts as changed when its seq DIFFERS (not only advances:
+        # a rollback restores the pre-update row at a LOWER seq, and that
+        # reversal must reach change-feed consumers — the self-heal
+        # contract) or, at an identical seq, when the payload differs (a
+        # corrected re-publish)
         same_row = (F.col(f"n.{SEQ_COL}") == F.col("_old_seq")) & F.struct(
             *[F.col(f"n.{c}") for c in payload_cols]
         ).eqNullSafe(F.struct(*[F.col(f"_o_{c}") for c in payload_cols]))

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .commitstore import CommitStore
-from .derived import IncrementalIndex, advance_pin, change_window
+from .derived import IncrementalIndex
 from .icebox import IceboxTable
 
 
@@ -289,10 +289,6 @@ class PackedTable(IncrementalIndex):
         meta = json.loads(table._store.get(_PACK_META_NAME))
         return cls(spark, table, meta=meta)
 
-    @staticmethod
-    def table_exists(path: str) -> bool:
-        return IceboxTable.exists(path)
-
     # ---------------- incremental maintenance ----------------
 
     def _pack_shards(self, src_table: IceboxTable, to_sid: int, shards: list) -> DataFrame:
@@ -354,25 +350,23 @@ class PackedTable(IncrementalIndex):
         """Fold the source table's changes since the last sync into the
         packed table by re-packing only the touched shards."""
         self._evolve_with_source(src_table)
-        from_sid, to_sid, ch = change_window(src_table, consumer=consumer, mode="cdf")
-        if ch is None:
-            return {
-                "skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid,
-            }
-        # touched shards: pre- AND post-images, so a doc moving between
-        # shards repacks both its old and new stream. Bounded collect —
-        # shard cardinality is source/bucket-scale metadata, not row-scale.
-        shards = [
-            r[0]
-            for r in ch.select(F.col(self.shard_col).alias("_s"))
-            .where(F.col("_s").isNotNull())
-            .distinct()
-            .collect()
-        ]
-        m: dict = {"applied_shards": len(shards)}
-        if shards:
-            packed = self._pack_shards(src_table, to_sid, shards)
-            ups = packed.select(
+        shards = None
+
+        def rows(ch, to_sid):
+            nonlocal shards
+            # touched shards: pre- AND post-images, so a doc moving between
+            # shards repacks both its old and new stream. Bounded collect —
+            # shard cardinality is source/bucket-scale metadata, not row-scale.
+            shards = [
+                r[0]
+                for r in ch.select(F.col(self.shard_col).alias("_s"))
+                .where(F.col("_s").isNotNull())
+                .distinct()
+                .collect()
+            ]
+            if not shards:
+                return None
+            ups = self._pack_shards(src_table, to_sid, shards).select(
                 F.lit("upsert").alias("_change"),
                 F.concat_ws(
                     ":", F.col("shard").cast("string"), F.col("seq_id").cast("string")
@@ -381,33 +375,13 @@ class PackedTable(IncrementalIndex):
             )
             # chunks past each shard's new end (or of a vanished shard)
             cur = self.table.read(filters=[("shard", "in", shards)])
-            nulls = [
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in self.table.schema.fields
-                if f.name != "pack_id"
-            ]
             stale = cur.select("pack_id").join(
                 ups.select("pack_id"), "pack_id", "left_anti"
-            ).select(F.lit("delete").alias("_change"), "pack_id", *nulls)
-            batch = ups.unionByName(stale).withColumn(
-                "_seq", F.lit(to_sid).cast("long")
             )
-            m = {
-                **self.table.merge(
-                    batch,
-                    batch_id=f"{consumer}:{from_sid}->{to_sid}",
-                    seq_col="_seq",
-                    op_col="_change",
-                    delete_value="delete",
-                    fence=False,
-                    tombstones=True,
-                    mor=None,
-                ),
-                **m,
-            }
-        advance_pin(src_table, consumer, from_sid, to_sid)
-        m = self._compact_if_needed(m)
-        return {**m, "from_snapshot": from_sid, "to_snapshot": to_sid}
+            return ups.unionByName(self._tombstones(stale))
+
+        m = self._fold(src_table, consumer=consumer, mode="cdf", rows=rows)
+        return m if shards is None else {**m, "applied_shards": len(shards)}
 
     # ---------------- query ----------------
 

@@ -107,10 +107,6 @@ class SignatureIndex(IncrementalIndex):
         meta = json.loads(table._store.get(_META_NAME))
         return cls(spark, table, k=int(meta["k"]), bands=int(meta["bands"]))
 
-    @staticmethod
-    def table_exists(path: str) -> bool:
-        return IceboxTable.exists(path)
-
     # ---------------- incremental maintenance ----------------
 
     def refresh_from(

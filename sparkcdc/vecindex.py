@@ -95,10 +95,6 @@ class VectorIndex(IncrementalIndex):
         )
         return cls(spark, table, dim=dim, n_planes=n_planes, n_bands=n_bands, seed=seed)
 
-    @staticmethod
-    def table_exists(path: str) -> bool:
-        return IceboxTable.exists(path)
-
     @classmethod
     def load(
         cls, spark: SparkSession, path: str, *, store: CommitStore | None = None

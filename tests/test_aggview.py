@@ -208,6 +208,81 @@ def test_refresh_replay_after_crash_is_exactly_once(spark, tmp_path):
     _assert_matches(view, tbl)
 
 
+_BOOT_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("source", T.StringType()),
+    T.StructField("n_tok", T.LongType()),
+    T.StructField("text", T.StringType()),
+])
+
+
+def _boot_log(spark, rows, seq0):
+    return spark.createDataFrame(
+        [(op, i, f"s{i % 2}", 7, f"doc {i} alpha beta gamma delta eps", seq0 + j)
+         for j, (op, i) in enumerate(rows)],
+        "op string, doc_id long, source string, n_tok long, text string, seq long",
+    )
+
+
+@pytest.mark.parametrize("kind", ["aggview", "sigindex"])
+def test_bootstrap_onto_expired_source_crash_is_exactly_once(spark, tmp_path, kind):
+    """Bootstrap onto a source whose snapshot 0 has expired, crash after
+    the merge but before the consumer is registered, and commit once more
+    before the retry: the retry re-reads the provisionally pinned
+    bootstrap window (a fenced no-op) and the next refresh folds the new
+    commit — nothing is folded twice and no deleted row survives."""
+    from sparkcdc.dedupe_docs import minhash_signatures
+    from sparkcdc.sigindex import SignatureIndex
+
+    src = IceboxTable.create(
+        spark, str(tmp_path / "src"), _BOOT_SCHEMA, key="doc_id", n_buckets=4
+    )
+    for b in range(3):
+        src.merge(_boot_log(spark, [("upsert", i) for i in range(6 * b, 6 * b + 6)],
+                            100 * b), f"b{b}")
+    src.expire_snapshots(keep_last=1)
+    assert 0 not in src._history_ids()
+    if kind == "aggview":
+        consumer = AggView.create(
+            spark, str(tmp_path / "v"), group_cols=["source"],
+            aggs={"n": ("count", None), "tok": ("sum", "n_tok")},
+            source_schema=_BOOT_SCHEMA,
+        )
+
+        def state():
+            return _rows(consumer.read()), _rows(src.read().groupBy("source").agg(
+                F.count("*").alias("n"), F.sum("n_tok").alias("tok")))
+    else:
+        consumer = SignatureIndex.create(
+            spark, str(tmp_path / "sig"), n_buckets=4, key_type=T.LongType()
+        )
+
+        def state():
+            return _rows(consumer.signatures()), _rows(
+                minhash_signatures(src.read().select("doc_id", "text")))
+
+    real_register = src.register_consumer
+    crashes = []
+
+    def crash_once(name, snapshot_id=None):
+        if name == kind and not crashes:
+            crashes.append(name)
+            raise RuntimeError("injected crash before consumer registration")
+        return real_register(name, snapshot_id)
+
+    src.register_consumer = crash_once
+    with pytest.raises(RuntimeError, match="injected crash"):
+        consumer.refresh_from(src)
+    src.register_consumer = real_register
+    src.merge(_boot_log(spark, [("upsert", 100), ("delete", 0)], 1_000), "b3")
+
+    consumer.refresh_from(src)  # retry: the pinned bootstrap window, fenced
+    consumer.refresh_from(src)  # the commit made after the crash
+    got, want = state()
+    assert got == want
+    assert src.consumers() == {kind: src.snapshot["snapshot_id"]}
+
+
 def test_additive_refresh_never_scans_source_table(spark, tmp_path):
     """count/sum/avg maintenance is pure window arithmetic: the source's
     read() is never invoked (the change feed is the only source access),

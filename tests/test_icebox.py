@@ -529,6 +529,19 @@ def test_read_changes_cdf_pre_post_images(spark, table):
         k: v["_seq"] for k, v in state2.items()
     }
 
+    # net is a projection of the same diff: preimages dropped, a delete
+    # keeps its key and old _seq with its payload NULL, the rest upserts
+    payload = [c for c in rows[0].__fields__ if c not in ("_change_type", "_seq")]
+    projected = [
+        ("delete", *[r[c] if c == "doc_id" else None for c in payload], r["_seq"])
+        if r["_change_type"] == "delete"
+        else ("upsert", *[r[c] for c in payload], r["_seq"])
+        for r in rows
+        if r["_change_type"] != "update_preimage"
+    ]
+    net = [tuple(r) for r in table.read_changes(s1).collect()]
+    assert sorted(net, key=repr) == sorted(projected, key=repr)
+
     with pytest.raises(ValueError):
         table.read_changes(s1, mode="bogus")
 
