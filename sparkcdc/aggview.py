@@ -279,17 +279,17 @@ class AggView(IncrementalIndex):
         ties the stored extremum (the one case min/max cannot be updated
         monotonically). Exactly-once: the MERGE batch id is the (from, to)
         snapshot pair, so a crash-replay of the same window is fenced."""
-        # refresh the source handle FIRST: the widening check must see the
-        # schema the window's CDF will be read at — validating against a
-        # stale handle would miss a widening committed inside the window
-        # and let the view merge's normalization cast silently wrap wide
-        # values (the exact corruption _evolve_with_source exists to stop)
-        src_table.refresh()
-        self._evolve_with_source(src_table)
-        return self._fold(
-            src_table, consumer=consumer, mode="cdf",
-            rows=lambda ch, to_sid: self._delta_rows(src_table, ch, to_sid),
-        )
+
+        def rows(ch, to_sid):
+            # after change_window refreshed src_table: the widening check
+            # sees the schema the window's CDF was read at — a stale handle
+            # would miss a widening committed inside the window and let the
+            # view merge's normalization cast silently wrap wide values
+            # (the exact corruption _evolve_with_source exists to stop)
+            self._evolve_with_source(src_table)
+            return self._delta_rows(src_table, ch, to_sid)
+
+        return self._fold(src_table, consumer=consumer, mode="cdf", rows=rows)
 
     def _delta_rows(self, src_table: IceboxTable, ch: DataFrame, to_sid: int):
         """The window's IVM step: fold the CDF ``ch`` into the stored

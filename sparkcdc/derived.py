@@ -3,14 +3,28 @@ change feed (SignatureIndex, SimhashIndex, NgramIndex, VectorIndex,
 PackedTable, AggView) and of user-defined sinks fed the same way.
 
 Every built-in consumer refreshes through ONE fold,
-``IncrementalIndex._fold``, built on the public ``consume_changes``; a
-table supplies only the rows to merge:
+``IncrementalIndex._fold``, on the same window-and-pin machinery as the
+public ``consume_changes``; a table supplies only the rows to merge:
 
   change_window(consumer)                   -- pinned read_changes window
     → rows(changes)                         -- the table's part, O(batch)
+    → materialize rows once                 -- probe + write read the blocks
     → MERGE, _seq = to, id = consumer:from->to  -- exactly-once under replay
     → advance_pin                           -- pin released
     → too_many_deltas → compact             -- bounded read amplification
+
+Each commit's window is evaluated once. Inside a ``shared_windows()``
+scope (the engine opens one around its refreshes after each commit),
+``change_window`` reads ``read_changes(from, to, mode="cdf")`` once per
+``(source, from, to)``, materializes it with ``localCheckpoint``, and hands
+it to every consumer pinned at ``from`` — net-mode consumers get its
+``net_of_cdf`` projection; a consumer whose pin lags reads its own
+window. The fold then materializes its ``_seq``-stamped rows once, so the
+merge's probe and its write both read blocks instead of re-running the
+diff, a repack or the IVM joins. ``_release`` frees every such block at
+the end of the fold and of the scope, on success and on error. A direct
+call to ``consume_changes`` still hands its sink the lazy window: a sink
+may keep a plan over it, and a released checkpoint cannot be recomputed.
 
 The source table's consumer registry pins the from-snapshot, so
 expiration can never break a consumer's incremental reader, and a crash
@@ -25,15 +39,78 @@ rather than folding a newer full state over the first one.
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .icebox import IceboxTable
+from .icebox import IceboxTable, net_of_cdf
 
 
 # suffix of the provisional pin a bootstrap-onto-expired window holds
 # until its merge is durable (reserved: no consumer name may end with it)
 BOOTSTRAP_PIN = "#bootstrap"
+
+
+def _materialize(df: DataFrame, held: list) -> DataFrame:
+    """``df`` evaluated once into executor blocks (``localCheckpoint``):
+    every later plan over the result reads the blocks instead of
+    re-running ``df``'s lineage. The blocks' RDD is appended to ``held``
+    for ``_release``."""
+    ck = df.localCheckpoint(eager=True)
+    held.append(ck._jdf.queryExecution().analyzed().rdd())
+    return ck
+
+
+def _release(held: list) -> None:
+    """Free the blocks of every checkpoint ``_materialize`` put in ``held``.
+    ``DataFrame.unpersist`` does not free a local checkpoint; unpersisting
+    its own RDD — the ``LogicalRDD`` at the root of its plan — does."""
+    while held:
+        held.pop().unpersist(False)
+
+
+class _Windows:
+    """A ``shared_windows`` scope: the materialized CDF of each
+    ``(source path, from, to)`` read so far, and the blocks they hold."""
+
+    def __init__(self):
+        self.cdfs: dict = {}
+        self.held: list = []
+
+
+_SCOPE: contextvars.ContextVar = contextvars.ContextVar("derived_windows", default=None)
+
+
+@contextlib.contextmanager
+def shared_windows():
+    """Scope in which each source window is read and evaluated once for
+    every consumer pinned at its from-snapshot (see ``change_window``).
+    Its blocks are freed when the scope exits, on success and on error."""
+    scope = _Windows()
+    token = _SCOPE.set(scope)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        _release(scope.held)
+
+
+def _read_window(src_table: IceboxTable, from_sid: int, to_sid: int, mode: str) -> DataFrame:
+    """``read_changes(from_sid, to_sid, mode=mode)`` — outside a
+    ``shared_windows`` scope as a lazy plan; inside one, a projection of
+    the scope's one materialized CDF read of that window."""
+    scope = _SCOPE.get()
+    if scope is None:
+        return src_table.read_changes(from_sid, to_sid, mode=mode)
+    k = (src_table.path, from_sid, to_sid)
+    if k not in scope.cdfs:
+        scope.cdfs[k] = _materialize(
+            src_table.read_changes(from_sid, to_sid, mode="cdf"), scope.held
+        )
+    cdf = scope.cdfs[k]
+    return cdf if mode == "cdf" else net_of_cdf(cdf, src_table.key)
 
 
 def change_window(
@@ -50,7 +127,14 @@ def change_window(
     re-merging a newer full state would fold the bootstrap twice (an
     aggregate double-counts; an LWW index keeps rows deleted since).
     ``mode`` is passed through to ``read_changes`` ("net" or "cdf"); the
-    bootstrap slice is shaped to match."""
+    bootstrap slice is shaped to match.
+
+    Inside a ``shared_windows`` scope, ``changes`` of a pinned window is
+    the scope's one materialized ``mode="cdf"`` read of ``(from, to)`` on
+    this source — read on the first request, handed to every later
+    consumer pinned at the same ``from`` (as its net projection in net
+    mode) and freed when the scope exits. A bootstrap-onto-expired window
+    is not shared."""
     to_sid = src_table.refresh()["snapshot_id"]
     regs = src_table.consumers()
     provisional = consumer + BOOTSTRAP_PIN
@@ -60,7 +144,7 @@ def change_window(
         from_sid = regs[consumer]
         if from_sid == to_sid:
             return from_sid, to_sid, None
-        return from_sid, to_sid, src_table.read_changes(from_sid, to_sid, mode=mode)
+        return from_sid, to_sid, _read_window(src_table, from_sid, to_sid, mode)
     if provisional in regs:
         to_sid = regs[provisional]  # replay the pinned bootstrap window
     elif 0 in src_table._history_ids():
@@ -69,7 +153,7 @@ def change_window(
         from_sid = src_table.register_consumer(consumer, 0)
         if from_sid == to_sid:
             return from_sid, to_sid, None
-        return from_sid, to_sid, src_table.read_changes(from_sid, to_sid, mode=mode)
+        return from_sid, to_sid, _read_window(src_table, from_sid, to_sid, mode)
     else:
         src_table.register_consumer(provisional, to_sid)
     # bootstrap onto a table whose empty snapshot is already expired:
@@ -151,7 +235,9 @@ class IncrementalIndex:
         rows to merge, ``(_change, key, payload...)`` with ``_change`` in
         {upsert, delete}, or None when the window touches nothing here.
         Skipped when the window is empty; otherwise MERGE, pin advance,
-        delta compaction, in that order."""
+        delta compaction, in that order. The rows are materialized once
+        before the MERGE and freed after it, so its probe and its write
+        share one evaluation of them."""
         folded = []  # set once the window is non-empty
 
         def apply(ch, from_sid, to_sid) -> dict:
@@ -159,29 +245,38 @@ class IncrementalIndex:
             batch = rows(ch, to_sid)
             if batch is None:
                 return {}
-            # the merged rows' LWW seq is the WINDOW's target snapshot id,
-            # not the source rows' own seqs: refresh order is what must
-            # win. With row seqs, a rollback-restored row (lower seq than
-            # the stale stored version) would LOSE the merge and the table
-            # would keep the rolled-back value forever — the change feed
-            # emits such reversals (icebox.read_changes) and the monotone
-            # to_sid lets them land. Exactly-once is unchanged: the batch
-            # id is still the (from, to) snapshot pair.
-            return self.table.merge(
-                batch.withColumn("_seq", F.lit(int(to_sid)).cast("long")),
-                batch_id=f"{consumer}:{from_sid}->{to_sid}",
-                seq_col="_seq",
-                op_col="_change",
-                delete_value="delete",
-                fence=False,
-                tombstones=True,
-                # cost-based: a small steady-state refresh lands as MOR
-                # deltas (O(batch) write) instead of COW-rewriting its
-                # buckets; the bootstrap (batch ≈ table) goes copy-on-write
-                mor=None,
-            )
+            held: list = []
+            try:
+                # the merged rows' LWW seq is the WINDOW's target snapshot
+                # id, not the source rows' own seqs: refresh order is what
+                # must win. With row seqs, a rollback-restored row (lower
+                # seq than the stale stored version) would LOSE the merge
+                # and the table would keep the rolled-back value forever —
+                # the change feed emits such reversals
+                # (icebox.read_changes) and the monotone to_sid lets them
+                # land. Exactly-once is unchanged: the batch id is still
+                # the (from, to) snapshot pair.
+                stamped = _materialize(
+                    batch.withColumn("_seq", F.lit(int(to_sid)).cast("long")), held
+                )
+                return self.table.merge(
+                    stamped,
+                    batch_id=f"{consumer}:{from_sid}->{to_sid}",
+                    seq_col="_seq",
+                    op_col="_change",
+                    delete_value="delete",
+                    fence=False,
+                    tombstones=True,
+                    # cost-based: a small steady-state refresh lands as MOR
+                    # deltas (O(batch) write) instead of COW-rewriting its
+                    # buckets; the bootstrap (batch ≈ table) goes
+                    # copy-on-write
+                    mor=None,
+                )
+            finally:
+                _release(held)
 
-        m = consume_changes(src_table, consumer, apply, mode=mode)
+        m = _consume(src_table, consumer, apply, mode=mode)
         return self._compact_if_needed(m) if folded else m
 
     def _refresh(self, src_table: IceboxTable, *, consumer: str, derive) -> dict:
@@ -220,17 +315,29 @@ def consume_changes(
     """The consumer-window machinery as a PUBLIC primitive: feed a
     user-defined downstream sink from the table's change feed with the
     same discipline the built-in consumers use (every one folds through
-    it, via ``IncrementalIndex._fold``) — the registry pins the from-snapshot
-    (expiration can never break the feed), the window is
-    ``read_changes(from=last-synced)`` in ``mode`` ("net" or "cdf"), and
-    the pin advances ONLY after ``apply_fn`` returns.
+    the same window and pin steps, via ``IncrementalIndex._fold``) — the
+    registry pins the from-snapshot (expiration can never break the feed),
+    the window is ``read_changes(from=last-synced)`` in ``mode`` ("net" or
+    "cdf"), and the pin advances ONLY after ``apply_fn`` returns.
 
     ``apply_fn(changes_df, from_sid, to_sid)`` — a crash before the pin
     advance replays the SAME (from, to) window on the next call, so
     end-to-end semantics are exactly-once iff the sink is idempotent per
     window (e.g. keyed by the (from, to) pair — the icebox MERGE batch-id
-    convention) and at-least-once otherwise. Returns the window metadata
-    plus whatever dict ``apply_fn`` returned."""
+    convention) and at-least-once otherwise. ``changes_df`` is always the
+    lazy window, also inside a ``shared_windows`` scope: the sink may keep
+    a plan over it, which the scope's released blocks could not serve.
+    Returns the window metadata plus whatever dict ``apply_fn`` returned."""
+    token = _SCOPE.set(None)
+    try:
+        return _consume(src_table, consumer, apply_fn, mode=mode)
+    finally:
+        _SCOPE.reset(token)
+
+
+def _consume(src_table: IceboxTable, consumer: str, apply_fn, *, mode: str) -> dict:
+    """``consume_changes`` with the window ``change_window`` returns in
+    the current scope (shared inside ``shared_windows``)."""
     from_sid, to_sid, ch = change_window(src_table, consumer=consumer, mode=mode)
     if ch is None:
         return {"skipped": True, "from_snapshot": from_sid, "to_snapshot": to_sid}

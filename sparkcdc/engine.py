@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from .changelog import max_seq, scan_slice
 from .config import ConfigError, JobConfig
-from .derived import too_many_deltas
+from .derived import shared_windows, too_many_deltas
 from .icebox import IceboxTable, bucket_expr
 from .metrics import MetricsLog
 from .schema_infer import detect_evolution
@@ -741,23 +741,27 @@ class CDCEngine:
             "sigindex": {"text_col": cfg.sigindex_text_col},
             "vecindex": {"vec_col": cfg.vecindex_vec_col},
         }
-        for attr, kind, count in _DERIVED:
-            # looked up per commit, never cached: each refresh folds the
-            # change feed since its own consumer pin — O(batch),
-            # exactly-once, and a replayed commit's refresh is a
-            # (from, to)-identical fenced no-op
-            view = getattr(self, attr)
-            if view is None:
-                continue
-            t = time.time()
-            ref = view.refresh_from(self.table, **opts.get(attr, {}))
-            self.metrics.emit({
-                "kind": kind,
-                "from_snapshot": ref.get("from_snapshot"),
-                "to_snapshot": ref.get("to_snapshot"),
-                count: ref.get(count, 0),
-                "duration_sec": time.time() - t,
-            })
+        # one scope for all refreshes: the commit's change window is read
+        # and evaluated once, shared by every table pinned at its
+        # from-snapshot, and freed when the last refresh returns
+        with shared_windows():
+            for attr, kind, count in _DERIVED:
+                # looked up per commit, never cached: each refresh folds
+                # the change feed since its own consumer pin — O(batch),
+                # exactly-once, and a replayed commit's refresh is a
+                # (from, to)-identical fenced no-op
+                view = getattr(self, attr)
+                if view is None:
+                    continue
+                t = time.time()
+                ref = view.refresh_from(self.table, **opts.get(attr, {}))
+                self.metrics.emit({
+                    "kind": kind,
+                    "from_snapshot": ref.get("from_snapshot"),
+                    "to_snapshot": ref.get("to_snapshot"),
+                    count: ref.get(count, 0),
+                    "duration_sec": time.time() - t,
+                })
         if cfg.target_bucket_bytes:
             # stats-driven partition evolution: bucket count doubles
             # whenever the average bucket outgrows the target — the

@@ -195,6 +195,26 @@ def _normalize_to(df: DataFrame, target: T.StructType, *, evolved: bool) -> Data
     return res
 
 
+def net_of_cdf(cdf: DataFrame, key: str) -> DataFrame:
+    """The net change feed as a projection of a ``read_changes`` CDF
+    (``mode="cdf"``) keyed by ``key``: preimages dropped; a ``delete`` keeps
+    its key and the last ``_seq`` visible at the from-snapshot (a
+    physically-removed row's own delete LSN is not retained), with its
+    payload nulled; every other row an ``upsert``. ``read_changes`` builds
+    its ``mode="net"`` with it, and so does a window shared across
+    consumers (``derived.shared_windows``) from its one CDF read."""
+    deleted = F.col("_change_type") == "delete"
+    return cdf.where(F.col("_change_type") != "update_preimage").select(
+        F.when(deleted, F.lit("delete")).otherwise(F.lit("upsert")).alias("_change"),
+        *[
+            F.col(c) if c == key else F.when(~deleted, F.col(c)).alias(c)
+            for c in cdf.columns
+            if c not in ("_change_type", SEQ_COL)
+        ],
+        SEQ_COL,
+    )
+
+
 class IceboxTable:
     """Snapshot-committed, hash-bucketed keyed table."""
 
@@ -839,22 +859,7 @@ class IceboxTable:
             )
 
         cdf = self._cdf(visible_state(old_snap), visible_state(new_snap), payload_cols)
-        if mode == "cdf":
-            return cdf
-        # net = the CDF without preimages; a delete keeps its key and the
-        # last _seq visible at from_snapshot (a physically-removed row's
-        # own delete LSN is not retained), with its payload nulled
-        deleted = F.col("_change_type") == "delete"
-        return cdf.where(F.col("_change_type") != "update_preimage").select(
-            F.when(deleted, F.lit("delete"))
-            .otherwise(F.lit("upsert"))
-            .alias("_change"),
-            *[
-                F.col(c) if c == self.key else F.when(~deleted, F.col(c)).alias(c)
-                for c in payload_cols
-            ],
-            SEQ_COL,
-        )
+        return cdf if mode == "cdf" else net_of_cdf(cdf, self.key)
 
     def _cdf(
         self, old_state: DataFrame, new_state: DataFrame, payload_cols: list[str]

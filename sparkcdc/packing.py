@@ -349,11 +349,13 @@ class PackedTable(IncrementalIndex):
     def refresh_from(self, src_table: IceboxTable, *, consumer: str = "packed") -> dict:
         """Fold the source table's changes since the last sync into the
         packed table by re-packing only the touched shards."""
-        self._evolve_with_source(src_table)
         shards = None
 
         def rows(ch, to_sid):
             nonlocal shards
+            # after change_window refreshed src_table: the widening check
+            # sees the schema at ``to``, also when another handle widened it
+            self._evolve_with_source(src_table)
             # touched shards: pre- AND post-images, so a doc moving between
             # shards repacks both its old and new stream. Bounded collect —
             # shard cardinality is source/bucket-scale metadata, not row-scale.

@@ -1486,3 +1486,119 @@ def test_totals_exclude_maintenance_records(spark, tmp_path):
     totals = eng.metrics.totals()
     assert totals["applied_events"] == 2_000  # not 4k/6k
     assert totals["batches"] == 2
+
+
+def _derived_engine_cfg(spark, tmp_path, n_events, seed):
+    """A text WAL of ``n_events`` (1_000-event batches) and an engine
+    config maintaining a signature index (net feed), a packed table and
+    an aggregate view (both CDF) beside the table."""
+    log = generate_changelog(spark, n_events, 150, seed=seed, dup_pct=0)
+    wal = log.select(
+        "seq", "op", "doc_id",
+        F.when(
+            F.col("tokens").isNotNull(),
+            F.concat_ws(" ", F.transform("tokens", lambda t: F.concat(F.lit("w"), t))),
+        ).alias("text"),
+        "source",
+    )
+    wal_path = str(tmp_path / "dwal")
+    write_log_parquet(wal, wal_path)
+    return JobConfig(
+        log_path=wal_path, table_path=str(tmp_path / "dtbl"), n_buckets=8,
+        batch_size=1_000, sigindex_path=str(tmp_path / "dsidx"),
+        packed_path=str(tmp_path / "dpk"), packed_seq_len=32,
+        aggview_path=str(tmp_path / "dagg"), aggview_group_cols=["source"],
+        aggview_aggs={"n_docs": ["count", None]},
+    )
+
+
+def _assert_derived_equal_recomputes(eng):
+    """Every derived table equals its one-shot recompute over the table's
+    current state."""
+    from sparkcdc.dedupe_docs import minhash_signatures
+    from sparkcdc.packing import pack_documents
+
+    corpus = eng.table.read()
+    got = sorted(tuple(r) for r in eng.sigindex.signatures()
+                 .select("doc_id", "mh_0").collect())
+    want = sorted(tuple(r) for r in minhash_signatures(corpus.select("doc_id", "text"))
+                  .select("doc_id", "mh_0").collect())
+    assert got == want and got
+    got = sorted(tuple(r) for r in eng.packed.chunks().select(
+        "shard", "seq_id", F.array_join("tokens", " ").alias("s"), "n_tok", "n_docs",
+    ).collect())
+    want = sorted(tuple(r) for r in pack_documents(
+        corpus.where(F.col("source").isNotNull()), 32, shard_col="source",
+    ).select(
+        F.col("source").alias("shard"), "seq_id", F.col("token_str").alias("s"),
+        "n_tok", "n_docs",
+    ).collect())
+    assert got == want and got
+    got = sorted(tuple(r) for r in eng.aggview.read().collect())
+    want = sorted(tuple(r) for r in corpus.groupBy("source")
+                  .agg(F.count("*").alias("n_docs")).collect())
+    assert got == want and got
+
+
+def test_one_changefeed_read_per_commit(spark, tmp_path, monkeypatch):
+    """Each commit's change window is read once and shared by every
+    derived table pinned at its from-snapshot (net and CDF consumers
+    alike); a consumer whose pin lags reads its own window."""
+    cfg = _derived_engine_cfg(spark, tmp_path, 3_000, seed=99)
+    reads = []
+    real = IceboxTable.read_changes
+
+    def counting(self, *a, **kw):
+        reads.append(a)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IceboxTable, "read_changes", counting)
+    eng = CDCEngine(spark, cfg)
+    eng.run(max_batches=1)  # bootstrap: all three pinned at snapshot 0
+    assert len(reads) == 1
+    view, eng.aggview = eng.aggview, None
+    eng.run(max_batches=1)  # the view's pin now lags one commit
+    assert len(reads) == 2
+    eng.aggview = view
+    eng.run()
+    assert len(reads) == 4  # the shared window + the lagging view's own
+    regs = eng.table.consumers()
+    to = eng.table.snapshot["snapshot_id"]
+    assert regs["sigindex"] == regs["packed"] == regs["aggview"] == to
+    _assert_derived_equal_recomputes(eng)
+
+
+def test_shared_window_blocks_released_and_crash_replays(spark, tmp_path, monkeypatch):
+    """Every block the shared window and the folds materialize is freed
+    when ``run()`` returns, also when a fold raises. A view merge that
+    raises after the packed table folded and pinned the same window
+    replays on the next run without double-counting."""
+    jsc = spark.sparkContext._jsc
+    n0 = jsc.getPersistentRDDs().size()
+    cfg = _derived_engine_cfg(spark, tmp_path, 3_000, seed=98)
+    eng = CDCEngine(spark, cfg)
+    eng.run(max_batches=1)
+    assert jsc.getPersistentRDDs().size() == n0
+
+    real = IceboxTable.merge
+    agg_path = eng.aggview.table.path
+
+    def failing(self, *a, **kw):
+        if self.path == agg_path:
+            raise RuntimeError("injected view merge failure")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IceboxTable, "merge", failing)
+    with pytest.raises(RuntimeError, match="injected view merge failure"):
+        eng.run(max_batches=1)
+    monkeypatch.setattr(IceboxTable, "merge", real)
+    assert jsc.getPersistentRDDs().size() == n0
+    regs = eng.table.consumers()
+    to = eng.table.snapshot["snapshot_id"]
+    assert regs["packed"] == to and regs["aggview"] < to
+
+    eng2 = CDCEngine(spark, cfg)
+    eng2.run()
+    assert jsc.getPersistentRDDs().size() == n0
+    assert set(eng2.table.consumers().values()) == {eng2.table.snapshot["snapshot_id"]}
+    _assert_derived_equal_recomputes(eng2)

@@ -501,3 +501,46 @@ def test_consumers_survive_source_column_add(spark, tmp_path, pk_source):
     assert _got_chunks(pt) == _expected_chunks(
         pk_source.read().select("doc_id", "text", "source")
     )
+
+
+def test_packed_widening_committed_through_other_handle_is_seen(spark, tmp_path):
+    """The widening check runs against the source schema at the window's
+    target snapshot: a widening plus a wide token committed through
+    ANOTHER handle reaches the packed table intact even when the refresh
+    is given a stale handle (a check against the stale schema would keep
+    array<int> and wrap 2^40 to 0)."""
+    V1 = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+        T.StructField("source", T.StringType()),
+    ])
+    V2 = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("tokens", T.ArrayType(T.LongType())),
+        T.StructField("source", T.StringType()),
+    ])
+    src = IceboxTable.create(spark, str(tmp_path / "odocs"), V1, n_buckets=2)
+    src.merge(
+        spark.createDataFrame(
+            [(i, [i, i + 1, i + 2], f"s{i % 2}") for i in range(8)], V1
+        ).select("*", F.col("doc_id").alias("seq"), F.lit("upsert").alias("op")),
+        "b1",
+    )
+    pt = PackedTable.create(
+        spark, str(tmp_path / "opk"), seq_len=4, token_type=T.IntegerType(),
+        tokens_col="tokens", shard_col="source", n_buckets=2,
+    )
+    pt.refresh_from(src)
+    # widening + wide token arrive through a DIFFERENT handle; `src` is stale
+    other = IceboxTable.load(spark, str(tmp_path / "odocs"))
+    other.update_schema(V2)
+    other.merge(
+        spark.createDataFrame([(100, [2**40], "s0")], V2).select(
+            "*", F.lit(10**9).cast("long").alias("seq"), F.lit("upsert").alias("op"),
+        ),
+        "b2",
+    )
+    pt.refresh_from(src)
+    assert pt.table.schema["tokens"].dataType.elementType.simpleString() == "bigint"
+    flat = {t for r in pt.chunks().collect() for t in r.tokens}
+    assert 2**40 in flat

@@ -628,3 +628,17 @@ def test_consume_changes_public_consumer_api(spark, tmp_path, doc_table):
         mode="cdf",
     )
     assert kinds == {"update_preimage", "update_postimage"}
+
+
+def test_consume_changes_sink_window_outlives_shared_scope(spark, doc_table):
+    """Inside a ``shared_windows`` scope the built-in folds share one
+    materialized window, but a ``consume_changes`` sink is handed the lazy
+    window: a plan the sink keeps stays computable after the scope has
+    freed its blocks."""
+    from sparkcdc.derived import consume_changes, shared_windows
+
+    doc_table.merge(_as_log(_docs(spark).where(F.col("doc_id") % 2 == 0)), "b1")
+    kept = []
+    with shared_windows():
+        consume_changes(doc_table, "keeper", lambda ch, a, b: kept.append(ch))
+    assert kept[0].where(F.col("_change") == "upsert").count() == 250
