@@ -120,87 +120,63 @@ def max_seq(log: DataFrame, *, seq_col: str = "seq") -> int:
     return int(row["m"]) if row["m"] is not None else 0
 
 
-def max_seq_parquet_stats(path: str, *, seq_col: str = "seq") -> int | None:
-    """Max LSN from parquet footer min/max statistics — no Spark job, no
-    data scan. A WAL directory holds O(files) footers; reading them
-    (threaded) is microseconds per file vs a full-column scan per run,
-    and is independent of cluster size (it is driver work either way).
-    Returns None when stats are unavailable (caller falls back to a scan)."""
+def _footer_stats(path: str, cols: list[str]) -> list[dict]:
+    """One threaded walk over the parquet footers under ``path`` — no
+    Spark job, no data scan; microseconds per file. Per file, each of
+    ``cols`` maps to its row groups' ``(max, null_count)`` statistics (an
+    entry is None where the footer lacks it), or to None when the file has
+    no such column. [] when there is no parquet file."""
     import glob as _glob
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
-    files = _glob.glob(_os.path.join(path, "*.parquet"))
-    if not files:
-        return None
-
-    def fmax(fpath: str) -> int | None:
+    def walk(fpath: str) -> dict:
         md = pq.ParquetFile(fpath).metadata
-        col_idx = next(
-            (j for j in range(md.num_columns) if md.schema.column(j).name == seq_col),
-            None,
-        )
-        if col_idx is None:
-            return None
-        mx: int | None = None
-        for i in range(md.num_row_groups):
-            st = md.row_group(i).column(col_idx).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mx = st.max if mx is None else max(mx, st.max)
-        return mx
+        idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
 
+        def groups(j: int) -> list:
+            out = []
+            for i in range(md.num_row_groups):
+                st = md.row_group(i).column(j).statistics
+                out.append((None, None) if st is None else
+                           (st.max if st.has_min_max else None, st.null_count))
+            return out
+
+        return {c: groups(idx[c]) if c in idx else None for c in cols}
+
+    files = _glob.glob(_os.path.join(path, "*.parquet"))
     with ThreadPoolExecutor(max_workers=16) as ex:
-        vals = list(ex.map(fmax, files))
-    if any(v is None for v in vals):
+        return list(ex.map(walk, files))
+
+
+def max_seq_parquet_stats(path: str, *, seq_col: str = "seq") -> int | None:
+    """Max LSN from parquet footer min/max statistics (``_footer_stats``):
+    a fixed driver cost per run instead of a full-column scan, and
+    independent of cluster size. Returns None when any file lacks the
+    statistics (caller falls back to a scan)."""
+    per_file = [f[seq_col] for f in _footer_stats(path, [seq_col])]
+    if not per_file or any(not g or any(mx is None for mx, _ in g) for g in per_file):
         return None
-    return max(vals)
+    return max(mx for g in per_file for mx, _ in g)
 
 
 def null_counts_parquet_stats(path: str, cols: list[str]) -> dict:
-    """Per-column null counts from parquet footer statistics — no Spark
-    job, no data scan (the same zero-cost probe discipline as
-    ``max_seq_parquet_stats``). A column maps to None when any file lacks
+    """Per-column null counts from parquet footer statistics
+    (``_footer_stats``). A column maps to None when any file lacks
     null-count statistics for it, or is absent from a file's schema; the
     caller then falls back to a scan. Lets a clean WAL prove itself clean
     for the cost of reading O(files) footers."""
-    import glob as _glob
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
+    per_file = _footer_stats(path, cols)
 
-    import pyarrow.parquet as pq
+    def total(c: str) -> int | None:
+        if not per_file or any(f[c] is None for f in per_file):
+            return None
+        counts = [n for f in per_file for _, n in f[c]]
+        return None if None in counts else sum(counts)
 
-    files = _glob.glob(_os.path.join(path, "*.parquet"))
-    if not files:
-        return {c: None for c in cols}
-
-    def fnulls(fpath: str) -> dict:
-        md = pq.ParquetFile(fpath).metadata
-        idx = {md.schema.column(j).name: j for j in range(md.num_columns)}
-        out = {}
-        for c in cols:
-            if c not in idx:
-                out[c] = None
-                continue
-            n = 0
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(idx[c]).statistics
-                if st is None or st.null_count is None:
-                    n = None
-                    break
-                n += st.null_count
-            out[c] = n
-        return out
-
-    with ThreadPoolExecutor(max_workers=16) as ex:
-        per_file = list(ex.map(fnulls, files))
-    totals: dict = {}
-    for c in cols:
-        vals = [p[c] for p in per_file]
-        totals[c] = None if any(v is None for v in vals) else sum(vals)
-    return totals
+    return {c: total(c) for c in cols}
 
 
 def _scan_json_max_by_file(spark: SparkSession, files: list[str], schema,

@@ -42,7 +42,11 @@ class JobConfig:
     ts_col: str = "ts"
     n_buckets: int = 64
     dynamic_schema: bool = False  # re-infer schema per run (JiraInputPlugin.java:89-91)
-    merge_mode: str = "cow"  # "cow" (rewrite touched buckets) | "mor" (delta files) | "auto" (cost-based per batch)
+    # write mode of the WAL loop's commits: "cow" (rewrite touched
+    # buckets) | "mor" (delta files) | "auto" (cost-based per batch). The
+    # streaming sink always writes cost-based; the bootstrap load is
+    # always copy-on-write (the dump is the whole table)
+    merge_mode: str = "cow"
     # table maintenance after every commit, applied by both front ends
     # (run() and the streaming sink), each counting its own commits:
     compact_every: int | None = None  # mor: fold deltas every N commits
@@ -123,7 +127,8 @@ class JobConfig:
     # vanishing silently (null seq never matches any LSN slice). Unset =
     # legacy behavior. Read back with ``sparkcdc.engine.read_dlq``.
     dlq_path: str | None = None
-    # write-audit-publish quality gate: when set, every batch is STAGED
+    # write-audit-publish quality gate: when set, every commit of every
+    # front end (WAL batch, streaming epoch, bootstrap dump) is STAGED
     # (invisible), audited with these checks against the would-be table
     # state, and only published if all pass (sparkcdc.audit). Specs are
     # check names with optional args, e.g.
@@ -134,15 +139,23 @@ class JobConfig:
     #   "abort"      — stop the run with AuditFailedError (default; an
     #                  operator investigates, the batch was never fenced
     #                  so the fixed feed re-submits under the same id)
-    #   "quarantine" — drop the batch, emit the report, continue; once a
-    #                  LATER batch commits, the quarantined events are
-    #                  permanently fenced out (deliberate: alert + move on)
+    #   "quarantine" — drop the batch, emit a ``batch-quarantined``
+    #                  record, continue; once a LATER batch commits, the
+    #                  quarantined events are permanently fenced out
+    #                  (deliberate: alert + move on)
+    # Both apply to WAL batches, streaming epochs and the bootstrap dump
+    # alike: a dump that fails its audit raises under "abort" and is
+    # dropped under "quarantine".
     audit_on_fail: str = "abort"
-    # driver-level retry of a failed merge commit (≈ JiraInputPlugin.java:69-83)
+    # driver-level retry of a failed merge commit (≈ JiraInputPlugin.java:69-83),
+    # for every front end's commits
     retry_limit: int = 5
     retry_initial_wait_sec: float = 1.0
     retry_max_wait_sec: float = 120.0
-    columns: list[dict] = field(default_factory=list)  # optional projection spec
+    # fixed-schema mode: every front end (WAL loop, streaming sink,
+    # bootstrap load) projects its batches through these declared
+    # columns, and the table's schema is theirs. Empty = the log's payload
+    columns: list[dict] = field(default_factory=list)
 
     def validate(self) -> "JobConfig":
         # ≈ validateTaskConfig's range checks (util/JiraUtil.java:58-96)

@@ -607,47 +607,62 @@ def near_dup_clusters(
     fault-tolerant) is used. Only nodes appearing in at least one pair
     are returned (singletons are trivially their own cluster).
     """
+    from .session import materialize, release
+
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def _ckpt(df: DataFrame) -> DataFrame:
+    def _ckpt(df: DataFrame, held: list) -> DataFrame:
         if checkpoint_dir is not None:
             return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+        return materialize(df, held)
 
     e = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
     edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     labels = (
         edges.select("a").distinct().select(F.col("a").alias("node"), F.col("a").alias("label"))
     )
-    if checkpoint:
-        edges = _ckpt(edges)
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            )
-        )
+    # local-checkpoint blocks: the edges', the latest round's labels' and
+    # the labels that round superseded, which it frees after its count.
+    # Whatever is still held (bar returned labels) is freed on the way out,
+    # converged, capped or failed
+    edge_blocks: list = []
+    label_blocks: list = []
+    superseded: list = []
+    try:
         if checkpoint:
-            new = _ckpt(new)
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            return labels.select(
-                F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+            edges = _ckpt(edges, edge_blocks)
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(labels, edges["b"] == labels["node"])
+                .groupBy("a")
+                .agg(F.min("label").alias("nlabel"))
             )
+            # a node's label moves iff a neighbor's is smaller; the flag
+            # rides in the round's state, so the changed count reads it
+            # instead of re-joining the new labels with the old
+            new = (
+                labels.join(nbr, labels["node"] == nbr["a"], "left")
+                .select(
+                    "node",
+                    F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
+                    F.coalesce(F.col("nlabel") < F.col("label"), F.lit(False)).alias("_moved"),
+                )
+            )
+            superseded, label_blocks = label_blocks, []
+            if checkpoint:
+                new = _ckpt(new, label_blocks)
+            changed = new.where("_moved").count()
+            release(superseded)
+            labels = new.drop("_moved")
+            if changed == 0:
+                label_blocks = []  # the result's blocks: the caller's to hold
+                return labels.select(
+                    F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+                )
+    finally:
+        for blocks in (edge_blocks, superseded, label_blocks):
+            release(blocks)
     raise RuntimeError(
         f"near_dup_clusters did not converge within max_iter={max_iter} "
         "rounds (component diameter exceeds the cap) — raise max_iter"

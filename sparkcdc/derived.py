@@ -21,7 +21,7 @@ it to every consumer pinned at ``from`` — net-mode consumers get its
 ``net_of_cdf`` projection; a consumer whose pin lags reads its own
 window. The fold then materializes its ``_seq``-stamped rows once, so the
 merge's probe and its write both read blocks instead of re-running the
-diff, a repack or the IVM joins. ``_release`` frees every such block at
+diff, a repack or the IVM joins. ``release`` frees every such block at
 the end of the fold and of the scope, on success and on error. A direct
 call to ``consume_changes`` still hands its sink the lazy window: a sink
 may keep a plan over it, and a released checkpoint cannot be recomputed.
@@ -46,29 +46,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .icebox import IceboxTable, net_of_cdf
+from .session import materialize, release
 
 
 # suffix of the provisional pin a bootstrap-onto-expired window holds
 # until its merge is durable (reserved: no consumer name may end with it)
 BOOTSTRAP_PIN = "#bootstrap"
-
-
-def _materialize(df: DataFrame, held: list) -> DataFrame:
-    """``df`` evaluated once into executor blocks (``localCheckpoint``):
-    every later plan over the result reads the blocks instead of
-    re-running ``df``'s lineage. The blocks' RDD is appended to ``held``
-    for ``_release``."""
-    ck = df.localCheckpoint(eager=True)
-    held.append(ck._jdf.queryExecution().analyzed().rdd())
-    return ck
-
-
-def _release(held: list) -> None:
-    """Free the blocks of every checkpoint ``_materialize`` put in ``held``.
-    ``DataFrame.unpersist`` does not free a local checkpoint; unpersisting
-    its own RDD — the ``LogicalRDD`` at the root of its plan — does."""
-    while held:
-        held.pop().unpersist(False)
 
 
 class _Windows:
@@ -94,7 +77,7 @@ def shared_windows():
         yield
     finally:
         _SCOPE.reset(token)
-        _release(scope.held)
+        release(scope.held)
 
 
 def _read_window(src_table: IceboxTable, from_sid: int, to_sid: int, mode: str) -> DataFrame:
@@ -106,7 +89,7 @@ def _read_window(src_table: IceboxTable, from_sid: int, to_sid: int, mode: str) 
         return src_table.read_changes(from_sid, to_sid, mode=mode)
     k = (src_table.path, from_sid, to_sid)
     if k not in scope.cdfs:
-        scope.cdfs[k] = _materialize(
+        scope.cdfs[k] = materialize(
             src_table.read_changes(from_sid, to_sid, mode="cdf"), scope.held
         )
     cdf = scope.cdfs[k]
@@ -256,7 +239,7 @@ class IncrementalIndex:
                 # (icebox.read_changes) and the monotone to_sid lets them
                 # land. Exactly-once is unchanged: the batch id is still
                 # the (from, to) snapshot pair.
-                stamped = _materialize(
+                stamped = materialize(
                     batch.withColumn("_seq", F.lit(int(to_sid)).cast("long")), held
                 )
                 return self.table.merge(
@@ -274,7 +257,7 @@ class IncrementalIndex:
                     mor=None,
                 )
             finally:
-                _release(held)
+                release(held)
 
         m = _consume(src_table, consumer, apply, mode=mode)
         return self._compact_if_needed(m) if folded else m

@@ -329,7 +329,7 @@ class CDCEngine:
         is integer arithmetic on its LSN — one groupBy (batch, bucket)
         replaces N groupBy (bucket) jobs.
 
-        The rows feed ``IceboxTable.merge(probe_stats=...)``, which
+        The rows feed ``IceboxTable.merge`` as its ``probe_stats``, which
         re-validates equivalence (fence ≤ lo, unchanged bucket layout)
         and re-probes itself whenever a concurrent commit or a mid-run
         rebucket invalidated a prefetched entry. The engine only calls
@@ -338,12 +338,8 @@ class CDCEngine:
         counts stale), and never larger than ``batches × n_buckets ≤
         200k`` collected rows (past that, per-batch probes keep driver
         memory flat)."""
-        df = self._apply_dynamic_ts(
-            self._project_declared(
-                scan_slice(
-                    self.log, plan[0][0], plan[-1][1], seq_col=self.cfg.seq_col
-                )
-            )
+        df = self._prepare(
+            scan_slice(self.log, plan[0][0], plan[-1][1], seq_col=self.cfg.seq_col)
         )
         key, nb = self.table.key, self.table.n_buckets
         lo0, b = plan[0][0], self.cfg.batch_size
@@ -468,15 +464,17 @@ class CDCEngine:
                 if c in batch.columns]
         return coerce_columns(batch, self.cfg.columns, keep=keep)
 
-    def _apply_dynamic_ts(self, batch: DataFrame) -> DataFrame:
-        """Parse dynamic-reguess timestamp upgrades with their DETECTED
+    def _prepare(self, batch: DataFrame) -> DataFrame:
+        """A raw batch as every commit, the probe prefetch and ``preview``
+        see it: projected through the declared columns, then with its
+        dynamic-reguess timestamp upgrades parsed with their DETECTED
         formats (coerce_timestamp handles %s and the non-ISO shapes a
         Catalyst cast would silently NULL)."""
+        out = self._project_declared(batch)
         if not self._dynamic_ts_formats:
-            return batch
+            return out
         from .coerce import coerce_timestamp
 
-        out = batch
         for name, fmt in self._dynamic_ts_formats.items():
             if name in out.columns and isinstance(
                 out.schema[name].dataType, T.StringType
@@ -526,60 +524,51 @@ class CDCEngine:
         the watermark (not any per-row seq the dump may have): the dump
         IS the folded state at the watermark, so a WAL event wins LWW
         against it iff its seq exceeds the watermark — exactly the
-        events the planner will ever feed."""
+        events the planner will ever feed.
+
+        The dump commits through ``_commit`` like any WAL slice: declared
+        columns, DLQ split, audit and retries all apply. A failed audit
+        raises under ``audit_on_fail="abort"``; under ``"quarantine"``
+        the dump is dropped and recorded as ``batch-quarantined``."""
         lsn = self._bootstrap_watermark()
         if lsn is None:
             return None
         if int(self.table.lineage["last_applied_lsn"]) >= lsn:
             return None  # already bootstrapped (or tailing beyond it)
         t0 = time.time()
-        dump = self.spark.read.parquet(self.cfg.bootstrap_path)
-        batch = dump
-        for c in (self.cfg.seq_col, self.cfg.op_col):
-            if c in batch.columns:
-                batch = batch.drop(c)
-        batch = batch.withColumn(self.cfg.op_col, F.lit("upsert")).withColumn(
-            self.cfg.seq_col, F.lit(lsn).cast("long")
-        )
-        n_dlq = 0
-        if self.cfg.dlq_path:
-            # a snapshot dump can carry the same damage a WAL can — a
-            # null-keyed row would otherwise seed the table with it
-            batch, n_dlq = self._quarantine_malformed(batch, f"bootstrap-{lsn}")
-        changes = self._maybe_evolve(batch)
-        m = self.table.merge(
-            batch, f"bootstrap-{lsn}",
-            seq_col=self.cfg.seq_col, op_col=self.cfg.op_col,
-            ts_col=self.cfg.ts_col if self.cfg.ts_col in batch.columns else None,
-            mor=False,  # the dump is the whole table: always copy-on-write
+        # the footer proof that may have cleared per-batch splitting
+        # covers only the WAL: a dump is always split when a DLQ is set
+        self._dlq_split = bool(self.cfg.dlq_path)
+        batch = (
+            self.spark.read.parquet(self.cfg.bootstrap_path)
+            .drop(self.cfg.seq_col, self.cfg.op_col)
+            .withColumn(self.cfg.op_col, F.lit("upsert"))
+            .withColumn(self.cfg.seq_col, F.lit(lsn).cast("long"))
         )
         return self.metrics.emit({
             "kind": "bootstrap",
             "watermark_lsn": lsn,
-            "schema_changes": changes,
-            "quarantined_rows": n_dlq,
+            # the dump is the whole table: always copy-on-write
+            **self._commit(batch, f"bootstrap-{lsn}", fence=True, mor=False),
             "duration_sec": time.time() - t0,
-            **m,
         })
 
-    def _quarantine_malformed(
-        self, batch, batch_id: str, *, include_null_seq: bool = False
-    ) -> tuple:
-        """Split malformed rows (null key / null op — and null seq for
-        callers whose batches are not LSN-sliced, i.e. the streaming
-        front-end) out of a batch and park them under
-        ``dlq_path/batch=<id>`` with a ``dlq_reason`` column. The
-        directory is overwritten on a crash-replay of the same batch, so
-        the DLQ never accumulates duplicates. Returns (well-formed batch,
-        quarantined count)."""
+    def _quarantine_malformed(self, batch, batch_id: str) -> tuple:
+        """Split malformed rows (null key, null op or null seq) out of a
+        batch and park them under ``dlq_path/batch=<id>`` with a
+        ``dlq_reason`` column. Only the streaming front end can see a null
+        seq: a WAL slice is an LSN range and a dump row carries the
+        watermark. The directory is overwritten on a crash-replay of the
+        same batch, so the DLQ never accumulates duplicates. Returns
+        (well-formed batch, quarantined count)."""
         cfg = self.cfg
-        bad_pred = F.col(cfg.key).isNull() | F.col(cfg.op_col).isNull()
-        if include_null_seq:
-            bad_pred = bad_pred | F.col(cfg.seq_col).isNull()
+        bad_pred = (
+            F.col(cfg.key).isNull() | F.col(cfg.op_col).isNull()
+            | F.col(cfg.seq_col).isNull()
+        )
         bad = batch.where(bad_pred).withColumn(
             "dlq_reason",
-            F.when(F.col(cfg.seq_col).isNull() & F.lit(include_null_seq),
-                   F.lit("null-seq"))
+            F.when(F.col(cfg.seq_col).isNull(), F.lit("null-seq"))
             .when(F.col(cfg.key).isNull(), F.lit("null-key"))
             .otherwise(F.lit("null-op")),
         )
@@ -621,77 +610,85 @@ class CDCEngine:
             )
             self.metrics.emit({"kind": "dlq", "reason": "null-seq", "rows": n})
 
-    def apply_batch(self, lo: int, hi: int) -> dict:
-        """Scan, quarantine, evolve and commit one LSN range. Returns the
-        commit's facts and merge metrics (``_post_commit`` emits them)."""
-        batch = self._apply_dynamic_ts(
-            self._project_declared(
-                scan_slice(self.log, lo, hi, seq_col=self.cfg.seq_col)
-            )
-        )
-        batch_id = f"b-{lo}-{hi}"
+    def _commit(
+        self, batch: DataFrame, batch_id: str, *, fence: bool,
+        mor: bool | None, probe_stats: dict | None = None,
+    ) -> dict:
+        """The one commit routine of every front end — the WAL loop
+        (``apply_batch``), the streaming sink and the bootstrap load:
+        prepare the raw batch, split its malformed rows into the DLQ,
+        evolve the schema, then merge (gated by write-audit-publish when
+        ``audit_checks`` is set) inside the retry loop. Returns the
+        commit's facts and merge metrics.
+
+        ``fence=False`` is the streaming sink's unordered file delivery:
+        no global LSN fence, and deletes persist as tombstones so a late
+        lower-seq update cannot resurrect a row. ``mor`` is the merge's
+        write mode (None = cost-based). ``probe_stats`` are the prefetched
+        merge-probe statistics of an unsplit WAL slice."""
+        cfg = self.cfg
+        batch = self._prepare(batch)
         n_dlq = 0
         if self._dlq_split:
             batch, n_dlq = self._quarantine_malformed(batch, batch_id)
-        # prefetched probe stats are aggregates over the UNQUARANTINED
-        # slice — only valid when quarantine did not touch this batch
-        probe_stats = (
-            self._probe_stats.get((lo, hi)) if not self._dlq_split else None
-        )
+            # prefetched stats are aggregates over the UNSPLIT slice
+            probe_stats = None
         changes = self._maybe_evolve(batch)
-        attempt, wait = 0, self.cfg.retry_initial_wait_sec
+        kw = dict(seq_col=cfg.seq_col, op_col=cfg.op_col, ts_col=cfg.ts_col,
+                  fence=fence, tombstones=not fence, mor=mor,
+                  probe_stats=probe_stats)
+        attempt, wait = 0, cfg.retry_initial_wait_sec
         while True:
             try:
-                mor = None if self.cfg.merge_mode == "auto" else (
-                    self.cfg.merge_mode == "mor"
-                )
-                if self.cfg.audit_checks:
+                if cfg.audit_checks:
                     # gated ingest: stage → audit the would-be state →
                     # publish-or-abort (write-audit-publish; audit.py).
                     # Crash-resumable and exactly-once like the plain
                     # merge — the staged delta carries the batch_id fence.
                     from .audit import build_checks, wap_ingest
 
-                    m = wap_ingest(
-                        self.table, batch, batch_id,
-                        checks=build_checks(self.cfg.audit_checks),
-                        mor=mor, seq_col=self.cfg.seq_col,
-                        op_col=self.cfg.op_col, ts_col=self.cfg.ts_col,
-                        probe_stats=probe_stats,
-                    )
+                    m = wap_ingest(self.table, batch, batch_id,
+                                   checks=build_checks(cfg.audit_checks), **kw)
                 else:
-                    m = self.table.merge(
-                        batch, batch_id, seq_col=self.cfg.seq_col,
-                        op_col=self.cfg.op_col, ts_col=self.cfg.ts_col,
-                        mor=mor, probe_stats=probe_stats,
-                    )
+                    m = self.table.merge(batch, batch_id, **kw)
                 break
             except Exception as exc:
                 if not is_retryable(exc):
                     raise  # deterministic, like non-retryable HTTP 4xx (JiraClient.java:128-147)
                 attempt += 1
-                if attempt > self.cfg.retry_limit:
+                if attempt > cfg.retry_limit:
                     raise
-                time.sleep(min(wait, self.cfg.retry_max_wait_sec))
+                time.sleep(min(wait, cfg.retry_max_wait_sec))
                 wait *= 2  # exponential backoff (JiraInputPlugin.java:69-75)
-        failed = m.get("reason") == "audit-failed"
-        if failed and self.cfg.audit_on_fail == "abort":
-            from .audit import AuditFailedError
+        rec = {"schema_changes": changes, "quarantined_rows": n_dlq, **m}
+        if m.get("reason") == "audit-failed":
+            if cfg.audit_on_fail == "abort":
+                from .audit import AuditFailedError
 
-            raise AuditFailedError(batch_id, m["audit"])
-        return {
+                raise AuditFailedError(batch_id, m["audit"])
             # quarantine: report + continue; the batch's events become
             # permanently fenced once a later batch advances the LSN
-            "kind": "batch-quarantined" if failed else "batch",
+            rec["kind"] = "batch-quarantined"
+        return rec
+
+    def apply_batch(self, lo: int, hi: int) -> dict:
+        """Scan and commit one LSN range. Returns the commit's facts and
+        merge metrics (``_post_commit`` emits them)."""
+        mode = self.cfg.merge_mode
+        return {
+            "kind": "batch",
             "lo": lo,
             "hi": hi,
             # range width is planning info; the headline denominator is the
             # probe's actual pre-dedup row count (applied_events) so dup
             # delivery / gaps / re-fenced replays can't skew the rate
             "range_width": hi - lo,
-            "schema_changes": changes,
-            "quarantined_rows": n_dlq,
-            **m,
+            **self._commit(
+                scan_slice(self.log, lo, hi, seq_col=self.cfg.seq_col),
+                f"b-{lo}-{hi}", fence=True,
+                mor=None if mode == "auto" else mode == "mor",
+                probe_stats=self._probe_stats.get((lo, hi)),
+            ),
         }
 
     def _commit_record(self, rec: dict, t0: float) -> dict:
@@ -842,7 +839,7 @@ class CDCEngine:
             last = max(last, bs)  # preview = next events ABOVE the dump
         nxt = scan_slice(self.log, last, last + self.cfg.batch_size,
                          seq_col=self.cfg.seq_col)
-        return self._project_declared(nxt).orderBy(self.cfg.seq_col).limit(n)
+        return self._prepare(nxt).orderBy(self.cfg.seq_col).limit(n)
 
     def read_table(self) -> DataFrame:
         return self.table.read()

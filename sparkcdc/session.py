@@ -32,6 +32,24 @@ def spread_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target) if cur < target else df
 
 
+def materialize(df: DataFrame, held: list) -> DataFrame:
+    """``df`` evaluated once into executor blocks (``localCheckpoint``):
+    every later plan over the result reads the blocks instead of
+    re-running ``df``'s lineage. The blocks' RDD is appended to ``held``
+    for ``release``."""
+    ck = df.localCheckpoint(eager=True)
+    held.append(ck._jdf.queryExecution().analyzed().rdd())
+    return ck
+
+
+def release(held: list) -> None:
+    """Free the blocks of every checkpoint ``materialize`` put in ``held``.
+    ``DataFrame.unpersist`` does not free a local checkpoint; unpersisting
+    its own RDD — the ``LogicalRDD`` at the root of its plan — does."""
+    while held:
+        held.pop().unpersist(False)
+
+
 def get_spark(
     app: str = "sparkcdc",
     master: str | None = None,

@@ -384,52 +384,69 @@ def dedup_gated_ingest(
     against the table scan instead — no unbounded driver collect on any
     input. Returns counts + the merge and refresh metrics."""
     from .dedupe_docs import shingles
+    from .session import materialize, release
 
-    ups = batch.where(F.col(op_col) != "delete")
-    cand = index.probe(ups, text_col=text_col, max_band=max_band)
-    cand_ids = cand.select("indexed_id").distinct()
-    idx_ids = [r["indexed_id"] for r in cand_ids.limit(point_read_threshold + 1).collect()]
-    dropped = 0
-    if idx_ids:
-        key = doc_table.key
-        if len(idx_ids) <= point_read_threshold:
-            cand_docs = doc_table.read_keys(idx_ids)
-        else:
-            # too many candidates for a keyed point-read: semi-join the
-            # candidate ids against the table scan (distributed, no
-            # driver materialization beyond the threshold probe above)
-            cand_docs = doc_table.read().join(
-                cand_ids.withColumnRenamed("indexed_id", key), key, "leftsemi"
+    # the candidate pairs and the losers are each evaluated once: the id
+    # collect and the verify join read the same probe, and the merge's
+    # probe and write both anti-join the losers
+    held: list = []
+    try:
+        ups = batch.where(F.col(op_col) != "delete")
+        cand = materialize(
+            index.probe(ups, text_col=text_col, max_band=max_band), held
+        )
+        cand_ids = cand.select("indexed_id").distinct()
+        idx_ids = [r["indexed_id"]
+                   for r in cand_ids.limit(point_read_threshold + 1).collect()]
+        dropped = 0
+        if idx_ids:
+            key = doc_table.key
+            if len(idx_ids) <= point_read_threshold:
+                cand_docs = doc_table.read_keys(idx_ids)
+            else:
+                # too many candidates for a keyed point-read: semi-join the
+                # candidate ids against the table scan (distributed, no
+                # driver materialization beyond the threshold probe above)
+                cand_docs = doc_table.read().join(
+                    cand_ids.withColumnRenamed("indexed_id", key), key, "leftsemi"
+                )
+            idx_docs = cand_docs.select(
+                F.col(key).alias("indexed_id"), F.col(text_col).alias("_itext")
             )
-        idx_docs = cand_docs.select(
-            F.col(key).alias("indexed_id"), F.col(text_col).alias("_itext")
-        )
-        sh_new = shingles(ups.select(F.col(key).alias("doc_id"), text_col))
-        sh_idx = shingles(
-            idx_docs.select(F.col("indexed_id").alias("doc_id"), F.col("_itext").alias(text_col))
-        )
-        cnt_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("n_new"))
-        cnt_idx = sh_idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
-        inter = (
-            cand.join(sh_new.select(F.col("doc_id").alias("new_id"), "shingle"), "new_id")
-            .join(sh_idx.select(F.col("doc_id").alias("indexed_id"), "shingle"),
-                  ["indexed_id", "shingle"])
-            .groupBy("new_id", "indexed_id")
-            .agg(F.count("*").alias("n_common"))
-        )
-        verified = (
-            inter.join(cnt_new.select(F.col("doc_id").alias("new_id"), "n_new"), "new_id")
-            .join(cnt_idx.select(F.col("doc_id").alias("indexed_id"), "n_idx"), "indexed_id")
-            .where(
-                F.col("n_common")
-                / (F.col("n_new") + F.col("n_idx") - F.col("n_common"))
-                >= threshold
+            sh_new = shingles(ups.select(F.col(key).alias("doc_id"), text_col))
+            sh_idx = shingles(
+                idx_docs.select(F.col("indexed_id").alias("doc_id"),
+                                F.col("_itext").alias(text_col))
             )
-        )
-        losers = verified.select(F.col("new_id").alias(doc_table.key)).distinct()
-        dropped = losers.count()
-        batch = batch.join(losers, doc_table.key, "left_anti")
-    m = doc_table.merge(batch, batch_id, seq_col=seq_col, op_col=op_col)
+            cnt_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("n_new"))
+            cnt_idx = sh_idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
+            inter = (
+                cand.join(sh_new.select(F.col("doc_id").alias("new_id"), "shingle"),
+                          "new_id")
+                .join(sh_idx.select(F.col("doc_id").alias("indexed_id"), "shingle"),
+                      ["indexed_id", "shingle"])
+                .groupBy("new_id", "indexed_id")
+                .agg(F.count("*").alias("n_common"))
+            )
+            verified = (
+                inter.join(cnt_new.select(F.col("doc_id").alias("new_id"), "n_new"),
+                           "new_id")
+                .join(cnt_idx.select(F.col("doc_id").alias("indexed_id"), "n_idx"),
+                      "indexed_id")
+                .where(
+                    F.col("n_common")
+                    / (F.col("n_new") + F.col("n_idx") - F.col("n_common"))
+                    >= threshold
+                )
+            )
+            losers = materialize(
+                verified.select(F.col("new_id").alias(key)).distinct(), held
+            )
+            dropped = losers.count()
+            batch = batch.join(losers, key, "left_anti")
+        m = doc_table.merge(batch, batch_id, seq_col=seq_col, op_col=op_col)
+    finally:
+        release(held)
     ref = index.refresh_from(doc_table)
     return {
         "dropped_near_dups": dropped,

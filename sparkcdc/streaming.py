@@ -8,6 +8,17 @@ icebox fence — the streaming checkpoint only provides source progress,
 the table's (bucket, last_applied_lsn) lineage + batch_id fence make
 re-delivered micro-batches no-ops, so the sink is idempotent under
 checkpoint replay.
+
+Each micro-batch commits through ``CDCEngine._commit`` and then
+``CDCEngine._post_commit``, the routines of the batch loop, so on the same
+input the stream lands what ``run()`` lands. The config applies as in
+``run()``: declared ``columns``, ``dlq_path`` (every epoch is split, and
+null-seq rows are parked too), schema evolution, ``audit_checks`` and
+``audit_on_fail``, ``retry_*``, the derived tables and table maintenance.
+The exceptions: writes are always cost-based (``merge_mode`` applies to the
+WAL loop only), ``stream_max_files_per_trigger`` sizes the micro-batches
+instead of ``batch_size``, and ``bootstrap_path`` and ``dynamic_schema``
+act only in ``run()``.
 """
 
 from __future__ import annotations
@@ -26,8 +37,12 @@ def run_streaming(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> dict | tuple[StreamingQuery, CDCEngine]:
-    """Tail cfg.log_path with a file-source stream; apply every micro-batch
-    via the icebox MERGE.
+    """Tail cfg.log_path with a file-source stream; commit every
+    micro-batch the way ``CDCEngine.run`` commits a WAL slice, with
+    cost-based writes and no global LSN fence (see the module docstring
+    for which config applies). An epoch its audit drops under
+    ``audit_on_fail="quarantine"`` is recorded as ``batch-quarantined``
+    with its ``epoch``.
 
     With ``available_now=True`` (default) the stream drains and engine
     metric totals are returned. With ``available_now=False`` the live
@@ -58,32 +73,17 @@ def run_streaming(
 
     def apply(batch_df, epoch_id: int) -> None:
         t0 = time.time()
-        batch_id = f"stream-{run_ns}-epoch-{epoch_id}"
-        n_dlq = 0
-        if engine._dlq_split:
-            # streaming batches are file-discovered, not LSN-sliced, so a
-            # null seq would reach the merge here — quarantine it per
-            # batch (epoch-keyed directory = idempotent under replay)
-            batch_df, n_dlq = engine._quarantine_malformed(
-                batch_df, batch_id, include_null_seq=True
-            )
-        changes = engine._maybe_evolve(batch_df)
-        # unordered file delivery: no global LSN fence; deletes persist as
-        # tombstones so late lower-seq updates cannot resurrect rows
-        # cost-based write per micro-batch (mor=None): steady-state stream
-        # batches are small relative to the table and land as MOR deltas;
-        # the initial backfill batches go copy-on-write
-        m = engine.table.merge(
-            batch_df, batch_id, seq_col=cfg.seq_col, op_col=cfg.op_col,
-            ts_col=cfg.ts_col, fence=False, tombstones=True, mor=None,
+        # the WAL loop's commit and post-commit path; fence=False: files
+        # arrive unordered, so there is no global LSN fence and deletes
+        # persist as tombstones. mor=None: cost-based writes (small
+        # steady-state epochs land as MOR deltas, the backfill copy-on-write)
+        rec = engine._commit(
+            batch_df, f"stream-{run_ns}-epoch-{epoch_id}", fence=False, mor=None
         )
-        # the batch loop's post-commit path: commit record, derived-table
-        # refresh (a replayed epoch's is a fenced no-op), then maintenance
-        # counted in this stream's commits
+        # a replayed epoch's derived refresh is a fenced no-op; maintenance
+        # counts in this stream's commits
         engine._post_commit(
-            {"kind": "stream-batch", "epoch": epoch_id, "schema_changes": changes,
-             "quarantined_rows": n_dlq, **m},
-            t0, next(commits),
+            {"kind": "stream-batch", "epoch": epoch_id, **rec}, t0, next(commits)
         )
 
     reader = spark.readStream.schema(static.schema).option(

@@ -470,6 +470,27 @@ def test_near_dup_clusters_connected_components(spark):
     assert all(r["cluster_id"] == "n00" for r in full) and len(full) == 13
 
 
+def test_near_dup_clusters_frees_its_local_checkpoints(spark):
+    """Superseded rounds' labels and the edge checkpoint are freed: only
+    the returned labels stay held, and a non-converging call holds none."""
+    import pytest as _pytest
+
+    from sparkcdc.dedupe_docs import near_dup_clusters
+
+    jsc = spark.sparkContext._jsc
+    chain = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(8)], "doc1: string, doc2: string"
+    )
+    before = jsc.getPersistentRDDs().size()
+    out = near_dup_clusters(chain)
+    assert jsc.getPersistentRDDs().size() <= before + 1
+    assert {r["cluster_id"] for r in out.collect()} == {"n0"}
+    held = jsc.getPersistentRDDs().size()
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        near_dup_clusters(chain, max_iter=2)
+    assert jsc.getPersistentRDDs().size() == held
+
+
 def test_simhash_native_bitvote_matches_reference_packing(spark):
     """The native path's 64-sum bit-vote + two-half sign packing must
     equal an independent Python bit-vote over the SAME per-token xxhash64
