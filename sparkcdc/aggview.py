@@ -379,12 +379,9 @@ class AggView(IncrementalIndex):
             else:  # min / max
                 least_or_greatest = F.least if kind == "min" else F.greatest
                 mono = least_or_greatest(F.col(f"_cur_{out}"), F.col(f"_post_{out}"))
-                if minmax:
-                    vals[out] = F.when(
-                        F.col("_reagged"), F.col(f"_true_{out}")
-                    ).otherwise(mono)
-                else:  # unreachable, kept for clarity
-                    vals[out] = mono
+                vals[out] = F.when(
+                    F.col("_reagged"), F.col(f"_true_{out}")
+                ).otherwise(mono)
         payload_cols = [f.name for f in self.table.schema.fields if f.name != _GK]
         rows = j.select(
             _GK, *gcols, *[vals[c].alias(c) for c in payload_cols if c not in gcols]

@@ -11,6 +11,13 @@ Two paths:
 
 Cosine is computed in float64 and rounded to 6 decimals before ranking with
 a vec_id tiebreak, so rankings are reproducible across engines.
+
+Shared similarity-search steps live here, one copy each: ``_cosine`` (the
+rounded float64 cosine) and ``_rank_topk`` (per-query top-k by cosine)
+serve every ANN path here and in ``vecindex``; ``cap_hot_groups`` (the
+deterministic hot-group downsample) serves the LSH bucket caps here, the
+MinHash band / SimHash chunk caps in ``dedupe_docs`` and the index probes
+in ``sigindex`` / ``vecindex``.
 """
 
 from __future__ import annotations
@@ -35,6 +42,28 @@ def _norm(a):
     )
 
 
+def _cosine(a, an, b, bn):
+    """cos(a, b) from per-side norms, float64, rounded to 6 dp. Norms are
+    computed once per row on each side, not per joined pair: the same
+    expression over the same array, so ``an * bn`` is bit-identical to the
+    inline formulation while the interpreted aggregate runs N+Q times
+    instead of N*Q."""
+    return F.round(_dot(F.col(a), F.col(b)) / (F.col(an) * F.col(bn)), 6)
+
+
+def _rank_topk(joined: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cos): the ``k`` best neighbors per
+    query of a joined ``(query_id, neighbor_id, qv, qn, cv, cn)`` frame,
+    ranked by cosine with a neighbor-id tiebreak."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        joined.select("query_id", "neighbor_id", _cosine("qv", "qn", "cv", "cn").alias("cos"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     *,
@@ -46,10 +75,6 @@ def cosine_topk(
     """Exact top-k neighbors for the first ``n_queries`` vectors (query =
     vec_id < n_queries), excluding self. Output: (query_id, neighbor_id,
     rank, cos) with cos rounded to 6 dp for cross-engine determinism."""
-    # norms are computed ONCE per query row and once per candidate row
-    # (not per joined pair): same expression over the same array, so the
-    # qn*cn product is bit-identical to the inline formulation, but the
-    # interpreted higher-order aggregate runs N+Q times instead of N*Q
     q = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         _norm(F.col(vec_col)).alias("qn"),
@@ -59,14 +84,7 @@ def cosine_topk(
         _norm(F.col(vec_col)).alias("cn"),
     )
     joined = c.crossJoin(F.broadcast(q)).where(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(joined, k)
 
 
 def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[int]]:
@@ -195,15 +213,7 @@ def ivf_ann_topk(
         ).alias("cluster"),
     )
     joined = c.join(F.broadcast(q), "cluster").where(F.col("neighbor_id") != F.col("query_id"))
-    # per-side norms (see cosine_topk): bit-identical product, N+Q evals
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(joined, k)
 
 
 def band_seed(seed: int, band: int) -> int:
@@ -221,13 +231,13 @@ def _band_tagged(
     n_planes: int,
     n_bands: int,
     seed: int,
-    max_bucket: int | None,
+    max_bucket: int,
 ) -> DataFrame:
     """(id, band, bucket): one row per (vector, band). Bands use
     independent hyperplane sets — candidates are OR-ed across bands
     (recall amplification: P(candidate) = 1-(1-p^planes)^bands). A
-    ``max_bucket`` cap drops oversized buckets (hot-region skew guard:
-    a bucket holding b vectors costs O(b²) in the pair join)."""
+    ``max_bucket`` cap downsamples oversized buckets (hot-region skew
+    guard: a bucket holding b vectors costs O(b²) in the pair join)."""
     bucket_cols = [
         lsh_bucket_expr(vec_col, lsh_planes(dim, n_planes, band_seed(seed, b)))
         for b in range(n_bands)
@@ -236,9 +246,7 @@ def _band_tagged(
         F.col(id_col),
         F.posexplode(F.array(*bucket_cols)).alias("band", "bucket"),
     )
-    if max_bucket is not None:
-        tagged = _cap_buckets(tagged, max_bucket, id_col)
-    return tagged
+    return cap_hot_groups(tagged, ["band", "bucket"], id_col, max_bucket)
 
 
 def approx_row_count(df: DataFrame) -> int | None:
@@ -311,17 +319,22 @@ def default_bucket_cap(n_rows: int, n_buckets_per_band: int) -> int:
     return max(512, math.ceil(8 * n_rows / max(1, n_buckets_per_band)))
 
 
-def _cap_buckets(tagged: DataFrame, max_bucket: int, id_col: str) -> DataFrame:
-    """Skew backstop: downsample every oversized (band, bucket) group to a
-    DETERMINISTIC max_bucket-row sample (xxhash64 order) instead of
-    dropping the bucket outright — work stays bounded at O(max_bucket²)
-    per bucket while hot regions still yield (degraded) candidates."""
-    w = Window.partitionBy("band", "bucket").orderBy(
+def cap_hot_groups(df: DataFrame, group_cols: list[str], id_col: str, cap: int) -> DataFrame:
+    """Hot-group skew backstop: downsample every ``group_cols`` group
+    larger than ``cap`` to a DETERMINISTIC ``cap``-row sample (the first
+    ``cap`` rows in ``abs(xxhash64(id)), id`` order) instead of dropping
+    the group outright — a join within the group stays bounded at
+    O(cap²) while hot regions still yield (degraded) candidates. The one
+    cap for LSH buckets, MinHash bands and SimHash chunks. ``cap <= 0``
+    is a no-op (exactness / oracle mode)."""
+    if cap <= 0:
+        return df
+    w = Window.partitionBy(*group_cols).orderBy(
         F.abs(F.xxhash64(F.col(id_col))), F.col(id_col)
     )
     return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_bucket)
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
         .drop("_rn")
     )
 
@@ -358,8 +371,7 @@ def cosine_near_dup_pairs(
         max_bucket = default_bucket_cap(_cap_row_count(emb, n_rows), 2 ** n_planes)
     tagged = _band_tagged(
         emb, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_planes=n_planes, n_bands=n_bands, seed=seed,
-        max_bucket=max_bucket if max_bucket > 0 else None,
+        n_planes=n_planes, n_bands=n_bands, seed=seed, max_bucket=max_bucket,
     )
     a = tagged.select(F.col(id_col).alias("id1"), "band", "bucket")
     b = tagged.select(F.col(id_col).alias("id2"), "band", "bucket")
@@ -374,9 +386,7 @@ def cosine_near_dup_pairs(
     v2 = emb.select(F.col(id_col).alias("id2"), F.col(vec_col).alias("v2"),
                     _norm(F.col(vec_col)).alias("n2"))
     pairs = cand.join(v1, "id1").join(v2, "id2")
-    # per-side norms (see cosine_topk): bit-identical product, one eval
-    # per vector row instead of one per verified pair
-    cos = F.round(_dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6)
+    cos = _cosine("v1", "n1", "v2", "n2")
     return pairs.select("id1", "id2", cos.alias("cos")).where(F.col("cos") >= threshold)
 
 
@@ -411,13 +421,14 @@ def lsh_ann_topk(
         max_bucket = default_bucket_cap(_cap_row_count(emb, n_rows), 2 ** n_planes)
     tagged = _band_tagged(
         emb, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_planes=n_planes, n_bands=n_bands, seed=seed, max_bucket=None,
+        n_planes=n_planes, n_bands=n_bands, seed=seed, max_bucket=0,
     )
     q = tagged.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"), "band", "bucket"
     )
-    cand_side = _cap_buckets(tagged, max_bucket, id_col) if max_bucket > 0 else tagged
-    c = cand_side.select(F.col(id_col).alias("neighbor_id"), "band", "bucket")
+    c = cap_hot_groups(tagged, ["band", "bucket"], id_col, max_bucket).select(
+        F.col(id_col).alias("neighbor_id"), "band", "bucket"
+    )
     cand = (
         c.join(F.broadcast(q), ["band", "bucket"])
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -429,12 +440,4 @@ def lsh_ann_topk(
     cv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
                     _norm(F.col(vec_col)).alias("cn"))
     joined = cand.join(F.broadcast(qv.where(F.col("query_id") < n_queries)), "query_id").join(cv, "neighbor_id")
-    # per-side norms (see cosine_topk): bit-identical product
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        joined.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(joined, k)

@@ -27,8 +27,10 @@ Three tiers, same semantics:
                             costs one index scan, not a corpus re-read,
                             and an ingest batch only re-hashes itself
 
-All gram derivation is native Catalyst (split / sequence / slice /
-transform / xxhash64) — no Python in any path.
+The two scans share one body, ``_containment_scan``; they differ only
+in the function that derives a document's distinct grams. All gram
+derivation is native Catalyst (split / sequence / slice / transform /
+xxhash64) — no Python in any path.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ from pyspark.sql import types as T
 from .commitstore import CommitStore
 from .derived import IncrementalIndex
 from .icebox import IceboxTable
+from .session import spread_scan
 
 import json
 
@@ -81,13 +84,37 @@ def token_ngram_hashes(tokens_col, n: int = DEFAULT_N):
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def _doc_grams(docs: DataFrame, *, n: int, text_col: str, id_col: str) -> DataFrame:
-    """(id, gram) distinct pairs per document — exact string grams."""
+def _containment_scan(
+    docs: DataFrame, bench: DataFrame, grams, col: str, id_col: str
+) -> DataFrame:
+    """``(id, n_hits, n_grams)`` for every doc sharing at least one gram
+    with ``bench``, where ``grams`` maps ``col`` to a row's distinct grams.
+
+    Plan: benchmark grams dedup'd and BROADCAST, marked with a literal;
+    one pass over the docs explodes each doc's distinct grams, broadcast
+    LEFT-joins the marker, and a SINGLE id-keyed aggregation produces
+    both counts — ``n_grams = count(*)`` and ``n_hits = count(marker)``
+    — with the inner-join semantics restored by ``n_hits > 0``. No
+    shuffle on the gram (n-grams are Zipfian; a gram-keyed shuffle would
+    hot-spot), the gram set is derived ONCE, and per-run cost is one
+    corpus scan regardless of benchmark size. The narrow (id, col)
+    projection is spread to full parallelism first (session.spread_scan)
+    so few-file corpora do not derive their grams on a handful of scan
+    tasks."""
+    bgrams = (
+        bench.select(F.explode(grams(F.col(col))).alias("gram"))
+        .distinct()
+        .withColumn("_m", F.lit(1))
+    )
+    dg = spread_scan(docs.select(id_col, col)).select(
+        id_col, F.explode(grams(F.col(col))).alias("gram")
+    )
     return (
-        docs.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("gram"),
-        )
+        dg.join(F.broadcast(bgrams), "gram", "left")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n_grams"), F.count("_m").alias("n_hits"))
+        .where(F.col("n_hits") > 0)
+        .select(id_col, "n_hits", "n_grams")
     )
 
 
@@ -102,37 +129,10 @@ def contamination_scan(
     """Exact-match contamination scan: for every document sharing at
     least one word ``n``-gram with the benchmark corpus, return
     ``(id, n_hits, n_grams)`` — hit count and the doc's distinct-gram
-    total (callers derive the contamination fraction).
-
-    Plan: benchmark grams dedup'd and BROADCAST, marked with a literal;
-    one pass over the docs explodes each doc's distinct grams, broadcast
-    LEFT-joins the marker, and a SINGLE id-keyed aggregation produces
-    both counts — ``n_grams = count(*)`` and ``n_hits = count(marker)``
-    — with the inner-join semantics restored by ``n_hits > 0``. No
-    shuffle on the gram (n-grams are Zipfian; a gram-keyed shuffle would
-    hot-spot), the gram set is derived ONCE (the previous totals-join
-    formulation derived it twice and paid a third join to stitch the
-    counts), and per-run cost is one corpus scan regardless of benchmark
-    size. The narrow (id, text) projection is spread to full parallelism
-    first (session.spread_scan) so few-file corpora do not derive their
-    grams on a handful of scan tasks."""
-    from .session import spread_scan
-
-    bgrams = (
-        bench.select(F.explode(word_ngrams(F.col(text_col), n)).alias("gram"))
-        .distinct()
-        .withColumn("_m", F.lit(1))
-    )
-    dg = spread_scan(docs.select(F.col(id_col), F.col(text_col).alias("_t"))).select(
-        id_col,
-        F.explode(F.array_distinct(word_ngrams(F.col("_t"), n))).alias("gram"),
-    )
-    return (
-        dg.join(F.broadcast(bgrams), "gram", "left")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_grams"), F.count("_m").alias("n_hits"))
-        .where(F.col("n_hits") > 0)
-        .select(id_col, "n_hits", "n_grams")
+    total (callers derive the contamination fraction). Plan: see
+    ``_containment_scan``."""
+    return _containment_scan(
+        docs, bench, lambda c: F.array_distinct(word_ngrams(c, n)), text_col, id_col
     )
 
 
@@ -149,27 +149,8 @@ def contamination_scan_hashed(
     gram hashes. A hash collision can produce a false positive
     (~2^-64 per comparison — negligible at any corpus size); downstream
     droppers that need certainty re-verify flagged docs exactly."""
-    from .session import spread_scan
-
-    bgrams = (
-        bench.select(
-            F.explode(token_ngram_hashes(F.col(tokens_col), n)).alias("gram_h")
-        )
-        .distinct()
-        .withColumn("_m", F.lit(1))
-    )
-    dg = spread_scan(
-        docs.select(F.col(id_col), F.col(tokens_col).alias("_tk"))
-    ).select(
-        id_col,
-        F.explode(token_ngram_hashes(F.col("_tk"), n)).alias("gram_h"),
-    )
-    return (
-        dg.join(F.broadcast(bgrams), "gram_h", "left")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_grams"), F.count("_m").alias("n_hits"))
-        .where(F.col("n_hits") > 0)
-        .select(id_col, "n_hits", "n_grams")
+    return _containment_scan(
+        docs, bench, lambda c: token_ngram_hashes(c, n), tokens_col, id_col
     )
 
 

@@ -13,15 +13,24 @@ Scale notes: exact dedup and minhash are linear + one shuffle each
 LSH bucket sizes, not O(n²); ngram_jaccard's shingle self-join is the
 small-scale/oracle path — at 100 TB only the LSH path runs, with skewed
 common-shingle keys excluded via a document-frequency cap.
+
+Shared steps, one copy each: ``_hashed_shingle_sets`` derives the hashed
+shingle set of every doc (n-gram Jaccard, LSH-verified, and
+``sigindex.dedup_gated_ingest``); ``_jaccard_verify`` is the exact Jaccard
+over candidate pairs (LSH-verified and gated ingest); the hot band and
+chunk caps are ``ann.cap_hot_groups``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from .ann import _cap_row_count, cap_hot_groups, default_bucket_cap
+from .session import materialize, release, spread_scan
 
 MINHASH_K = 8  # hash streams
 LSH_BANDS = 4  # → rows per band = K / BANDS = 2
@@ -29,10 +38,10 @@ SHINGLE_N = 3
 
 
 def _shingle_array(text_col, n: int = SHINGLE_N):
-    """array<string> of the DISTINCT word n-grams of a text column — the
-    per-row form of ``shingles``: deriving the set as ONE array expression
-    lets single-pass consumers (minhash, the jaccard paths) avoid the
-    explode→distinct→re-aggregate shuffle cycle entirely (guide §2.4)."""
+    """array<string> of the DISTINCT word n-grams of a text column:
+    deriving the set as ONE array expression lets single-pass consumers
+    (minhash, the jaccard paths) avoid an explode→distinct→re-aggregate
+    shuffle cycle entirely (guide §2.4)."""
     words = F.split(F.trim(text_col), "\\s+")
     # guard: Spark's sequence(1, 0) is DESCENDING [1,0]; docs shorter than
     # the shingle width must yield an empty shingle set instead
@@ -46,34 +55,55 @@ def _shingle_array(text_col, n: int = SHINGLE_N):
     return F.array_distinct(sh)
 
 
-def _hashed_shingle_sets(
-    df: DataFrame, text_col: str = "text", n: int = SHINGLE_N
-) -> DataFrame:
-    """(doc_id, _h: array<bigint>) — the xxhash64 image of each row's
-    distinct shingle set, re-deduped after hashing so set sizes and set
-    intersections over ``_h`` equal those over the string sets (modulo
-    64-bit collisions, ~2^-64 per cross-doc comparison). The jaccard
-    paths compare ONLY equality of shingles, so 8-byte hashes shuffle and
-    compare instead of ~25-byte strings (guide §2.3 "shuffle keys and
-    metadata instead of payloads"). The narrow (doc_id, text) projection
-    is spread to full parallelism first so few-file corpora do not derive
-    on 1-4 scan tasks (session.spread_scan; a no-op at scale)."""
-    from .session import spread_scan
+def _hashed_shingle_sets(src: DataFrame, text_col: str) -> DataFrame:
+    """``src`` with its ``text_col`` replaced by ``_h: array<bigint>``, the
+    xxhash64 image of the row's distinct shingle set, re-deduped after
+    hashing so set sizes and set intersections over ``_h`` equal those
+    over the string sets (modulo 64-bit collisions, ~2^-64 per cross-doc
+    comparison). The jaccard paths compare ONLY equality of shingles, so
+    8-byte hashes shuffle and compare instead of ~25-byte strings (guide
+    §2.3 "shuffle keys and metadata instead of payloads").
 
-    src = spread_scan(df.select("doc_id", F.col(text_col).alias("_t")))
+    ``src`` is the caller's narrow projection (the key columns plus the
+    text): a corpus-sized caller spreads it first (``spread_scan``) so
+    few-file corpora do not derive on 1-4 scan tasks."""
+    keep = [c for c in src.columns if c != text_col]
     return src.select(
-        "doc_id",
+        *keep,
         F.array_distinct(
-            F.transform(_shingle_array(F.col("_t"), n), lambda s: F.xxhash64(s))
+            F.transform(_shingle_array(F.col(text_col)), lambda s: F.xxhash64(s))
         ).alias("_h"),
     )
 
 
-def shingles(df: DataFrame, text_col: str = "text", n: int = SHINGLE_N) -> DataFrame:
-    """(doc_id, shingle) — distinct word n-grams per document."""
+def _jaccard_verify(
+    pairs: DataFrame,
+    sets1: DataFrame,
+    sets2: DataFrame,
+    threshold: float,
+    *,
+    id1: str = "doc1",
+    id2: str = "doc2",
+) -> DataFrame:
+    """(id1, id2, jaccard) for every candidate pair whose exact shingle
+    Jaccard is ≥ ``threshold``: each side's hashed shingle SET
+    (``_hashed_shingle_sets``, keyed ``doc_id``; one array row per doc,
+    no explode) attaches to ``pairs`` by an equi-join, and ``n_common =
+    size(array_intersect(h1, h2))`` is computed per pair. A pair with an
+    empty intersection (or an unshingleable side) yields jaccard 0/NULL
+    and is dropped; the ``n_common > 0`` guard keeps it out even at
+    threshold <= 0, as an inner intersection join of exploded shingles
+    would."""
+    j = pairs.join(
+        sets1.select(F.col("doc_id").alias(id1), F.col("_h").alias("_h1")), id1
+    ).join(sets2.select(F.col("doc_id").alias(id2), F.col("_h").alias("_h2")), id2)
+    n_common = F.size(F.array_intersect("_h1", "_h2")).cast("long")
+    n1 = F.size("_h1").cast("long")
+    n2 = F.size("_h2").cast("long")
     return (
-        df.select("doc_id", F.explode(_shingle_array(F.col(text_col), n)).alias("shingle"))
-        .distinct()
+        j.where(n_common > 0)
+        .select(id1, id2, (n_common / (n1 + n2 - n_common)).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -120,14 +150,8 @@ def ngram_jaccard_pairs(
     collisions (~2^-64 per cross-doc comparison). ``df`` is expected to
     carry one row per doc_id (true of every corpus table here);
     pre-dedupe rows otherwise."""
-    from .session import spread_scan
-
-    sets = spread_scan(df.select("doc_id", block_col, text_col)).select(
-        "doc_id",
-        block_col,
-        F.array_distinct(
-            F.transform(_shingle_array(F.col(text_col)), lambda s: F.xxhash64(s))
-        ).alias("_h"),
+    sets = _hashed_shingle_sets(
+        spread_scan(df.select("doc_id", block_col, text_col)), text_col
     )
     if df_cap is not None:
         # capped mode: per-doc counts must reflect the POST-cap shingle
@@ -190,8 +214,6 @@ def minhash_signatures(df: DataFrame, *, k: int = MINHASH_K, text_col: str = "te
     total, of 8 partial minima per doc). The narrow (doc_id, text)
     projection is spread to full parallelism first (session.spread_scan):
     a few-file corpus otherwise runs the md5 streams on 1-4 scan tasks."""
-    from .session import spread_scan
-
     src = spread_scan(df.select("doc_id", F.col(text_col).alias("_t")))
     sh = src.select("doc_id", F.explode(_shingle_array(F.col("_t"))).alias("shingle"))
     aggs = [
@@ -219,18 +241,9 @@ def band_keys(sig: DataFrame, *, k: int = MINHASH_K, bands: int = LSH_BANDS) -> 
 
 
 def cap_hot_bands(banded: DataFrame, max_band: int) -> DataFrame:
-    """Hot-band skew guard: deterministically downsample band groups larger
-    than ``max_band`` (xxhash64 order). ``max_band <= 0`` is a no-op."""
-    if max_band <= 0:
-        return banded
-    w = Window.partitionBy("band", "band_key").orderBy(
-        F.abs(F.xxhash64(F.col("doc_id"))), F.col("doc_id")
-    )
-    return (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_band)
-        .drop("_rn")
-    )
+    """Hot-band skew guard: ``ann.cap_hot_groups`` over the (band,
+    band_key) groups of a banded frame. ``max_band <= 0`` is a no-op."""
+    return cap_hot_groups(banded, ["band", "band_key"], "doc_id", max_band)
 
 
 def banded_pairs(banded: DataFrame) -> DataFrame:
@@ -292,41 +305,18 @@ def lsh_verified_pairs(
     banding bounds regardless of corpus-wide shingle frequencies.
     ``max_band`` passes through to the candidate stage's hot-band guard.
 
-    Plan shape (r6): verification attaches each doc's hashed shingle SET
-    (one array row per doc — no explode) to the candidate pairs with two
-    equi-joins, then computes ``n_common = size(array_intersect(h1, h2))``
-    per pair. The exploded-shingle intersection join re-derived the
-    shingle rows three more times and shuffled them into two sort-merge
-    joins; here the per-doc set is derived once per join side and only
-    candidate-pair rows carry arrays through the final projection. A
-    candidate pair with an empty intersection (or an unshingleable side)
-    yields jaccard 0/NULL and is dropped by the threshold filter, exactly
-    as the inner intersection join dropped it."""
+    Plan shape (r6): verification is ``_jaccard_verify`` — each doc's
+    hashed shingle SET joins the candidate pairs and the intersection is
+    an array op per pair. The exploded-shingle intersection join
+    re-derived the shingle rows three more times and shuffled them into
+    two sort-merge joins; here the per-doc set is derived once per join
+    side and only candidate-pair rows carry arrays through the final
+    projection."""
     cand = minhash_lsh_pairs(df, k=k, bands=bands, text_col=text_col, max_band=max_band)
-    h = _hashed_shingle_sets(df, text_col)
-    j = (
-        cand.join(
-            h.select(F.col("doc_id").alias("doc1"), F.col("_h").alias("_h1")), "doc1"
-        )
-        .join(
-            h.select(F.col("doc_id").alias("doc2"), F.col("_h").alias("_h2")), "doc2"
-        )
+    h = _hashed_shingle_sets(
+        spread_scan(df.select("doc_id", F.col(text_col).alias("_t"))), "_t"
     )
-    n_common = F.size(F.array_intersect("_h1", "_h2")).cast("long")
-    n1 = F.size("_h1").cast("long")
-    n2 = F.size("_h2").cast("long")
-    return (
-        # the n_common > 0 guard mirrors the inner intersection join of the
-        # exploded formulation (a zero-overlap pair produced no row there,
-        # so it must not appear here even at threshold <= 0)
-        j.where(n_common > 0)
-        .select(
-            "doc1",
-            "doc2",
-            (n_common / (n1 + n2 - n_common)).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verify(cand, h, h, threshold)
 
 
 def simhash64_native(df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -352,8 +342,6 @@ def simhash64_native(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     spread to full parallelism first (session.spread_scan) so the
     token-hash bit-vote partial aggregation does not run on a handful of
     scan tasks over a few-file corpus."""
-    from .session import spread_scan
-
     src = spread_scan(df.select("doc_id", F.col(text_col).alias("_t")))
     toks = src.select(
         "doc_id",
@@ -486,8 +474,6 @@ def simhash_near_pairs(
     family whose bits are replicable in DuckDB SQL (oracle mode). Pair
     sets differ between families only where hamming distances straddle
     ``max_hamming`` — both are valid SimHash instantiations."""
-    from .ann import _cap_row_count, default_bucket_cap
-
     if max_chunk is None:
         max_chunk = default_bucket_cap(_cap_row_count(df, n_rows), 65536)
     if hash_family == "native":
@@ -495,8 +481,6 @@ def simhash_near_pairs(
     elif hash_family == "md5":
         # spread the narrow projection so the Arrow-UDF stage runs on all
         # cores' Python workers, not the 1-4 scan tasks of a small corpus
-        from .session import spread_scan
-
         src = spread_scan(df.select("doc_id", F.col(text_col).alias("_t")))
         h = src.select("doc_id", simhash64(F.col("_t")).alias("sim"))
     else:
@@ -532,16 +516,7 @@ def simhash_chunk_pairs(
     doc2)`` determining the hamming distance; a doc with two sims can
     emit the same pair twice with different distances. Not checked
     here — that would cost a shuffle of ``h``."""
-    chunks = sim_chunks(h)
-    if max_chunk > 0:
-        w = Window.partitionBy("chunk_idx", "chunk").orderBy(
-            F.abs(F.xxhash64(F.col("doc_id"))), F.col("doc_id")
-        )
-        chunks = (
-            chunks.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_chunk)
-            .drop("_rn")
-        )
+    chunks = cap_hot_groups(sim_chunks(h), ["chunk_idx", "chunk"], "doc_id", max_chunk)
     x = chunks.alias("x")
     y = chunks.alias("y")
     ham = F.bit_count(F.col("x.sim").bitwiseXOR(F.col("y.sim")))
@@ -607,8 +582,6 @@ def near_dup_clusters(
     fault-tolerant) is used. Only nodes appearing in at least one pair
     are returned (singletons are trivially their own cluster).
     """
-    from .session import materialize, release
-
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 

@@ -1003,7 +1003,18 @@ class IceboxTable:
         """Metadata-only schema commit (add column / widen type). Old data
         files stay untouched; reads normalize them forward. Concurrent
         schema changes serialize: on conflict the loser reloads and
-        re-applies (idempotent when the other writer made the same change)."""
+        re-applies (idempotent when the other writer made the same change).
+
+        The key column's type is fixed: ``bucket_expr`` hashes the key's
+        physical type (an int and a bigint of equal value land in different
+        buckets), so widening it would split each key across two buckets.
+        Such a change raises ``ValueError``."""
+        old_key = self.schema[self.key].dataType
+        if self.key not in new_schema.fieldNames() or new_schema[self.key].dataType != old_key:
+            raise ValueError(
+                f"the key column {self.key!r} ({old_key.simpleString()}) cannot "
+                "change type or be dropped: buckets hash its physical type"
+            )
         for _ in range(3):
             snap = self._snap
             if new_schema.json() == self.schema.json():

@@ -36,10 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ann import _cap_row_count, cap_hot_groups, default_bucket_cap
 from .commitstore import CommitStore
+from .dedup import lww_dedup
 from .dedupe_docs import (
     LSH_BANDS,
     MINHASH_K,
+    _hashed_shingle_sets,
+    _jaccard_verify,
     band_keys,
     banded_pairs,
     cap_hot_bands,
@@ -50,6 +54,7 @@ from .dedupe_docs import (
 )
 from .derived import IncrementalIndex
 from .icebox import IceboxTable
+from .session import materialize, release
 
 _META_NAME = "sigindex.json"
 _SIM_META_NAME = "simindex.json"
@@ -279,8 +284,6 @@ class SimhashIndex(IncrementalIndex):
         equals ``simhash_near_pairs`` over the current corpus with ZERO
         re-hashing. Default hot-chunk cap sized from a zero-job row count
         of the index itself."""
-        from .ann import _cap_row_count, default_bucket_cap
-
         sims = self.sims()
         if max_chunk is None:
             max_chunk = default_bucket_cap(_cap_row_count(sims, None), 65536)
@@ -301,8 +304,6 @@ class SimhashIndex(IncrementalIndex):
         over the batch only, the batch's chunk rows are BROADCAST, and the
         index is scanned once with no shuffle. Docs already indexed match
         themselves; the self-pair is filtered."""
-        from .ann import _cap_row_count, default_bucket_cap
-
         nsim = simhash64_native(new_docs, text_col=text_col).where(
             F.col("sim").isNotNull()
         )
@@ -323,17 +324,7 @@ class SimhashIndex(IncrementalIndex):
             ["chunk_idx", "chunk"],
             "leftsemi",
         )
-        if max_chunk > 0:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("chunk_idx", "chunk").orderBy(
-                F.abs(F.xxhash64(F.col("doc_id"))), F.col("doc_id")
-            )
-            ib = (
-                ib.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= max_chunk)
-                .drop("_rn")
-            )
+        ib = cap_hot_groups(ib, ["chunk_idx", "chunk"], "doc_id", max_chunk)
         ham = F.bit_count(F.col("sim").bitwiseXOR(F.col("nsim")))
         return (
             ib.join(F.broadcast(nb), ["chunk_idx", "chunk"])
@@ -372,35 +363,43 @@ def dedup_gated_ingest(
                    change-feed refresh, staying exactly in sync
 
     Per-batch cost is O(batch CPU + index scan + candidate point-reads) —
-    independent of corpus text size. In-batch duplicates are NOT handled
-    here (run exact_dedupe / minhash over the batch first if producers
-    can emit them); a batch doc pairing only with other batch docs is
-    ingested.
+    independent of corpus text size. Each key is judged by the version
+    the merge commits: the probe and the verify run over the batch's
+    per-key LWW winners (``lww_dedup`` on ``seq_col``), and a key whose
+    winner is a delete is not gated. In-batch duplicates across keys are
+    NOT handled here (run exact_dedupe / minhash over the batch first if
+    producers can emit them); a batch doc pairing only with other batch
+    docs is ingested.
 
     Candidate texts come via ``read_keys`` point lookups (bucket +
     footer-range pruning) while the distinct candidate id set fits
     ``point_read_threshold`` driver-side; a dup-heavy batch whose
     candidate set blows past it switches to a distributed semi-join
     against the table scan instead — no unbounded driver collect on any
-    input. Returns counts + the merge and refresh metrics."""
-    from .dedupe_docs import shingles
-    from .session import materialize, release
-
-    # the candidate pairs and the losers are each evaluated once: the id
-    # collect and the verify join read the same probe, and the merge's
-    # probe and write both anti-join the losers
+    input. The verify is ``dedupe_docs._jaccard_verify`` over hashed
+    shingle sets, the one ``lsh_verified_pairs`` uses. Returns counts +
+    the merge and refresh metrics."""
+    key = doc_table.key
+    # the winners, the candidate pairs and the losers are each evaluated
+    # once: the probe and the verify read the same winners, the id collect
+    # and the verify join the same probe, and the merge's probe and write
+    # both anti-join the losers
     held: list = []
     try:
-        ups = batch.where(F.col(op_col) != "delete")
+        new = materialize(
+            lww_dedup(batch, key, seq_col)
+            .where(F.col(op_col) != "delete")
+            .select(F.col(key).alias("doc_id"), text_col),
+            held,
+        )
         cand = materialize(
-            index.probe(ups, text_col=text_col, max_band=max_band), held
+            index.probe(new, text_col=text_col, max_band=max_band), held
         )
         cand_ids = cand.select("indexed_id").distinct()
         idx_ids = [r["indexed_id"]
                    for r in cand_ids.limit(point_read_threshold + 1).collect()]
         dropped = 0
         if idx_ids:
-            key = doc_table.key
             if len(idx_ids) <= point_read_threshold:
                 cand_docs = doc_table.read_keys(idx_ids)
             else:
@@ -410,34 +409,15 @@ def dedup_gated_ingest(
                 cand_docs = doc_table.read().join(
                     cand_ids.withColumnRenamed("indexed_id", key), key, "leftsemi"
                 )
-            idx_docs = cand_docs.select(
-                F.col(key).alias("indexed_id"), F.col(text_col).alias("_itext")
-            )
-            sh_new = shingles(ups.select(F.col(key).alias("doc_id"), text_col))
-            sh_idx = shingles(
-                idx_docs.select(F.col("indexed_id").alias("doc_id"),
-                                F.col("_itext").alias(text_col))
-            )
-            cnt_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("n_new"))
-            cnt_idx = sh_idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
-            inter = (
-                cand.join(sh_new.select(F.col("doc_id").alias("new_id"), "shingle"),
-                          "new_id")
-                .join(sh_idx.select(F.col("doc_id").alias("indexed_id"), "shingle"),
-                      ["indexed_id", "shingle"])
-                .groupBy("new_id", "indexed_id")
-                .agg(F.count("*").alias("n_common"))
-            )
-            verified = (
-                inter.join(cnt_new.select(F.col("doc_id").alias("new_id"), "n_new"),
-                           "new_id")
-                .join(cnt_idx.select(F.col("doc_id").alias("indexed_id"), "n_idx"),
-                      "indexed_id")
-                .where(
-                    F.col("n_common")
-                    / (F.col("n_new") + F.col("n_idx") - F.col("n_common"))
-                    >= threshold
-                )
+            verified = _jaccard_verify(
+                cand,
+                _hashed_shingle_sets(new, text_col),
+                _hashed_shingle_sets(
+                    cand_docs.select(F.col(key).alias("doc_id"), text_col), text_col
+                ),
+                threshold,
+                id1="new_id",
+                id2="indexed_id",
             )
             losers = materialize(
                 verified.select(F.col("new_id").alias(key)).distinct(), held

@@ -25,11 +25,19 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ann import _cap_buckets, _dot, _norm, band_seed, lsh_bucket_expr, lsh_planes
+from .ann import (
+    _norm,
+    _rank_topk,
+    band_seed,
+    cap_hot_groups,
+    default_bucket_cap,
+    lsh_bucket_expr,
+    lsh_planes,
+)
 from .commitstore import CommitStore
 from .derived import IncrementalIndex
 from .icebox import IceboxTable
@@ -171,8 +179,6 @@ class VectorIndex(IncrementalIndex):
         projection and exact cosines from the stored vectors. ``max_bucket``
         is the same candidate-side hot-bucket cap; ``None`` derives the
         default from the index's own manifest row stats (no count job)."""
-        from .ann import default_bucket_cap
-
         self.table.refresh()
         if max_bucket is None:
             n_rows = sum(e["rows"] for e in self.table.snapshot["manifest"])
@@ -181,10 +187,9 @@ class VectorIndex(IncrementalIndex):
         q = tagged.where(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), "band", "bucket"
         )
-        cand_side = (
-            _cap_buckets(tagged, max_bucket, "vec_id") if max_bucket > 0 else tagged
+        c = cap_hot_groups(tagged, ["band", "bucket"], "vec_id", max_bucket).select(
+            F.col("vec_id").alias("neighbor_id"), "band", "bucket"
         )
-        c = cand_side.select(F.col("vec_id").alias("neighbor_id"), "band", "bucket")
         cand = (
             c.join(F.broadcast(q), ["band", "bucket"])
             .where(F.col("neighbor_id") != F.col("query_id"))
@@ -201,18 +206,7 @@ class VectorIndex(IncrementalIndex):
             _norm(F.col("embedding")).alias("cn"),
         )
         joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-        # per-side norms (see ann.cosine_topk): bit-identical product, one
-        # interpreted norm eval per vector row instead of per pair
-        cos = F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-        return (
-            joined.select("query_id", "neighbor_id", cos.alias("cos"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos")
-        )
+        return _rank_topk(joined, k)
 
     def probe_topk(
         self,
@@ -228,8 +222,6 @@ class VectorIndex(IncrementalIndex):
         and exact cosines come from the index. The ingest-time "find my
         neighbors before committing" path: per-query-set cost is
         O(queries · hashing + index scan), not O(corpus · hashing)."""
-        from .ann import default_bucket_cap
-
         self.table.refresh()
         if max_bucket is None:
             n_rows = sum(e["rows"] for e in self.table.snapshot["manifest"])
@@ -241,11 +233,9 @@ class VectorIndex(IncrementalIndex):
                 F.array(*[c for c in self._bucket_cols(vec_col)])
             ).alias("band", "bucket"),
         )
-        tagged = self.tagged()
-        cand_side = (
-            _cap_buckets(tagged, max_bucket, "vec_id") if max_bucket > 0 else tagged
+        c = cap_hot_groups(self.tagged(), ["band", "bucket"], "vec_id", max_bucket).select(
+            F.col("vec_id").alias("neighbor_id"), "band", "bucket"
         )
-        c = cand_side.select(F.col("vec_id").alias("neighbor_id"), "band", "bucket")
         cand = (
             c.join(F.broadcast(qtag.select("query_id", "band", "bucket")),
                    ["band", "bucket"])
@@ -260,14 +250,4 @@ class VectorIndex(IncrementalIndex):
             _norm(F.col("embedding")).alias("cn"),
         )
         joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-        # per-side norms (see ann.cosine_topk): bit-identical product
-        cos = F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-        return (
-            joined.select("query_id", "neighbor_id", cos.alias("cos"))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos")
-        )
+        return _rank_topk(joined, k)

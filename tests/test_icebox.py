@@ -123,6 +123,35 @@ def test_time_travel(spark, table):
     oracle.assert_table_equal(table.read(snapshot_id=sid).toPandas(), state1)
 
 
+def test_update_schema_refuses_key_type_change(spark, tmp_path):
+    """Buckets hash the key's physical type (Murmur3 over 4 bytes for an
+    int, 8 for a bigint), so widening the key would file a re-merged key
+    in a new bucket beside its old row: read() would return one row per
+    version and read_keys only the new one. update_schema, the one path
+    every evolution takes, refuses it; the table stays one row per key."""
+    int_key = T.StructType([T.StructField("doc_id", T.IntegerType()),
+                            T.StructField("v", T.StringType())])
+    t = IceboxTable.create(spark, str(tmp_path / "tbl"), int_key, n_buckets=64)
+
+    def batch(keys, v, seq):
+        return spark.createDataFrame(
+            [(k, v, seq, "upsert") for k in keys],
+            "doc_id: int, v: string, seq: long, op: string",
+        )
+
+    t.merge(batch(range(20), "a", 1), "b1")
+    widened = T.StructType([T.StructField("doc_id", T.LongType()),
+                            T.StructField("v", T.StringType())])
+    with pytest.raises(ValueError, match="doc_id"):
+        t.update_schema(widened)
+    with pytest.raises(ValueError, match="doc_id"):
+        t.update_schema(T.StructType([T.StructField("v", T.StringType())]))
+    assert dict(t.read().dtypes)["doc_id"] == "int"
+    t.merge(batch(range(3), "b", 2), "b2")
+    assert t.read().count() == 20
+    assert sorted(r.v for r in t.read_keys([0, 1, 2]).collect()) == ["b", "b", "b"]
+
+
 def test_schema_evolution_widen_and_add(spark, table):
     v1 = generate_changelog(spark, 2_000, 200, seed=4, schema_version=1)
     table.merge(v1, "b1")

@@ -204,3 +204,29 @@ def test_default_simhash_path_is_fully_native(spark):
     assert "HashAggregate" in native  # the 64-sum bit vote, partial-agg'd
     md5 = _plan(simhash_near_pairs(df, n_rows=20, hash_family="md5"))
     assert "ArrowEvalPython" in md5
+
+
+def test_near_dup_operator_stage_counts(spark):
+    """Pin the Window, Generate and shuffle Exchange nodes of the three
+    near-duplicate operators' plans, so no refactor adds a stage unseen.
+    Windows are the hot-group caps (one per join side); Generates are the
+    shingle / band / chunk explodes."""
+    import re
+
+    from sparkcdc.dedupe_docs import (
+        lsh_verified_pairs,
+        ngram_jaccard_pairs,
+        simhash_near_pairs,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    expect = {
+        "ngram_jaccard": (ngram_jaccard_pairs(docs, threshold=0.6), (0, 2, 3)),
+        "lsh_verified": (lsh_verified_pairs(docs, threshold=0.6), (2, 4, 9)),
+        "simhash": (simhash_near_pairs(docs, max_hamming=4, n_rows=500), (2, 4, 7)),
+    }
+    for op, (df, counts) in expect.items():
+        tree = _plan(df).split("\n\n")[0]
+        got = tuple(len(re.findall(rf"\b{node} \(\d+\)", tree))
+                    for node in ("Window", "Generate", "Exchange"))
+        assert got == counts, (op, got, tree)

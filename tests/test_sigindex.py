@@ -327,6 +327,43 @@ def test_dedup_gated_ingest_drops_corpus_near_dups(spark, tmp_path, doc_table):
     ) == _sorted_rows(minhash_signatures(corpus_now).select("doc_id", "mh_0"))
 
 
+def test_dedup_gated_ingest_judges_each_keys_winning_version(
+    spark, tmp_path, doc_table
+):
+    """A key upserted more than once in one batch is judged by the version
+    the merge commits, not by the union of its versions: a near-copy that
+    wins is dropped, a near-copy that a unique version supersedes lands,
+    and a key whose winner is a delete is deleted, not gated."""
+    from sparkcdc.sigindex import dedup_gated_ingest
+
+    corpus = _docs(spark).where(F.col("doc_id") < 300)
+    idx = SignatureIndex.create(
+        spark, str(tmp_path / "sig"), n_buckets=4, key_type=T.LongType()
+    )
+    doc_table.merge(_as_log(corpus), "b0")
+    idx.refresh_from(doc_table)
+    texts = {r.doc_id: r.text for r in corpus.where("doc_id < 3").collect()}
+    unique = " ".join(f"novel{i}word" for i in range(80))
+    rows = [
+        (30_000, unique, 1, "upsert"),                      # unique, then
+        (30_000, texts[1] + " tail", 2, "upsert"),          # near-dup wins
+        (30_001, texts[2] + " tail", 1, "upsert"),          # near-dup, then
+        (30_001, unique + " extra", 2, "upsert"),           # unique wins
+        (0, texts[2] + " tail", 1, "upsert"),               # near-dup, then
+        (0, texts[0], 2, "delete"),                         # delete wins
+    ]
+    batch = spark.createDataFrame(
+        [(k, t, "en", seq + 100_000, op) for k, t, seq, op in rows],
+        "doc_id: long, text: string, lang: string, seq: long, op: string",
+    )
+    res = dedup_gated_ingest(doc_table, idx, batch, "gated-lww", threshold=0.6)
+    assert res["dropped_near_dups"] == 1
+    ids = {r.doc_id for r in doc_table.read().select("doc_id").collect()}
+    assert 30_000 not in ids
+    assert 30_001 in ids
+    assert 0 not in ids
+
+
 def test_racing_maintainers_refresh_exactly_once(spark, tmp_path, doc_table):
     """Two index handles (two drivers) refresh the SAME change window
     concurrently: both derive the same (from,to) batch id, so exactly one

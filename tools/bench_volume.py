@@ -11,8 +11,7 @@ is recorded with the usual noise caveat.
 
 Usage: python tools/bench_volume.py [n_events] [cpus]
 Appends nothing; prints one JSON line — fold into BENCH/BASELINE.md by
-hand (tools/bench_scaling.py rewrites that file wholesale; this one
-deliberately does not touch it).
+hand.
 """
 
 from __future__ import annotations
