@@ -55,9 +55,10 @@ def _rank_topk(joined: DataFrame, k: int) -> DataFrame:
     """(query_id, neighbor_id, rank, cos): the ``k`` best neighbors per
     query of a joined ``(query_id, neighbor_id, qv, qn, cv, cn)`` frame,
     ranked by cosine with a neighbor-id tiebreak."""
+    cos = _cosine("qv", "qn", "cv", "cn")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        joined.select("query_id", "neighbor_id", _cosine("qv", "qn", "cv", "cn").alias("cos"))
+        joined.select("query_id", "neighbor_id", cos.alias("cos"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos")
