@@ -29,7 +29,8 @@ Module map (see SURVEY.md §7):
     textops       token counts / lang-ID / quality / fingerprints
     dedupe_docs   exact / Jaccard / MinHash-LSH / SimHash near-dup
     derived       IncrementalIndex (base of every change-feed maintained
-                  table); consume_changes (public consumer-window API);
+                  table: one fold, one create/load with a spec
+                  sidecar); consume_changes (public consumer-window API);
                   shared_windows (one window read per commit)
     sigindex      persistent MinHash index, change-feed maintained
     vecindex      persistent LSH-ANN vector index, change-feed maintained

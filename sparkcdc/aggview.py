@@ -31,8 +31,6 @@ the view's row set is exactly ``SELECT group_cols FROM source GROUP BY``.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,7 +39,6 @@ from .commitstore import CommitStore
 from .derived import IncrementalIndex
 from .icebox import IceboxTable
 
-_META_NAME = "aggview.json"
 _GK = "_gk"
 _N = "_n"
 
@@ -144,12 +141,13 @@ class AggView(IncrementalIndex):
     """A persistent GROUP BY rollup of a source icebox table, maintained
     incrementally from the source's change feed (see module docstring)."""
 
+    SPEC_FILE = "aggview.json"
+
     def __init__(
-        self, spark: SparkSession, table: IceboxTable,
-        group_cols: list[str], aggs: dict[str, tuple],
+        self, spark: SparkSession, table: IceboxTable, *,
+        group_cols: list[str], aggs: dict,
     ):
-        self.spark = spark
-        self.table = table
+        super().__init__(spark, table)
         self.group_cols = list(group_cols)
         self.aggs = {k: (kind, col) for k, (kind, col) in aggs.items()}
 
@@ -174,28 +172,11 @@ class AggView(IncrementalIndex):
         every maintainer resolves the same arithmetic."""
         aggs = {k: (v[0], v[1]) for k, v in aggs.items()}
         _validate_specs(group_cols, aggs, source_schema)
-        table = IceboxTable.create(
+        return cls._create(
             spark, path, _view_schema(group_cols, aggs, source_schema),
             key=_GK, n_buckets=n_buckets, store=store,
-        )
-        table._store.put(
-            _META_NAME,
-            json.dumps({
-                "group_cols": list(group_cols),
-                "aggs": {k: [kind, col] for k, (kind, col) in aggs.items()},
-            }).encode(),
-        )
-        return cls(spark, table, group_cols, aggs)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "AggView":
-        table = IceboxTable.load(spark, path, store=store)
-        meta = json.loads(table._store.get(_META_NAME))
-        return cls(
-            spark, table, meta["group_cols"],
-            {k: (v[0], v[1]) for k, v in meta["aggs"].items()},
+            spec={"group_cols": list(group_cols),
+                  "aggs": {k: [kind, col] for k, (kind, col) in aggs.items()}},
         )
 
     # ---------------- incremental maintenance ----------------

@@ -14,7 +14,9 @@ a vec_id tiebreak, so rankings are reproducible across engines.
 
 Shared similarity-search steps live here, one copy each: ``_cosine`` (the
 rounded float64 cosine) and ``_rank_topk`` (per-query top-k by cosine)
-serve every ANN path here and in ``vecindex``; ``cap_hot_groups`` (the
+serve every ANN path here and in ``vecindex``; ``_lsh_topk`` (the capped
+bucket join, candidate dedup and vector joins) serves ``lsh_ann_topk``
+and both ``VectorIndex`` top-k paths; ``cap_hot_groups`` (the
 deterministic hot-group downsample) serves the LSH bucket caps here, the
 MinHash band / SimHash chunk caps in ``dedupe_docs`` and the index probes
 in ``sigindex`` / ``vecindex``.
@@ -424,21 +426,51 @@ def lsh_ann_topk(
         emb, id_col=id_col, vec_col=vec_col, dim=dim,
         n_planes=n_planes, n_bands=n_bands, seed=seed, max_bucket=0,
     )
-    q = tagged.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), "band", "bucket"
+    return _lsh_topk(
+        tagged, emb, k=k, max_bucket=max_bucket, id_col=id_col, vec_col=vec_col,
+        n_queries=n_queries,
     )
+
+
+def _lsh_topk(
+    tagged: DataFrame,
+    vecs: DataFrame,
+    *,
+    k: int,
+    max_bucket: int,
+    id_col: str,
+    vec_col: str,
+    n_queries: int | None = None,
+    queries: tuple | None = None,
+) -> DataFrame:
+    """The one LSH candidate step and its top-k, shared by
+    ``lsh_ann_topk`` and ``vecindex.VectorIndex``: the corpus rows
+    ``tagged`` ``(id_col, band, bucket)``, hot groups capped at
+    ``max_bucket``, join the broadcast query rows ``(query_id, band,
+    bucket)``; the distinct pairs then join the broadcast query vectors
+    ``(query_id, qv)`` and the candidate vectors of ``vecs``, each with
+    its norm, and are ranked by ``_rank_topk``. The queries are either
+    the corpus vectors with id < ``n_queries`` (a query's pair with
+    itself is dropped) or external: ``queries`` is then the pair (query
+    rows, query vectors)."""
+    if n_queries is None:
+        q, qv = queries
+    else:
+        q = tagged.where(F.col(id_col) < n_queries).select(
+            F.col(id_col).alias("query_id"), "band", "bucket"
+        )
+        qv = vecs.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")).where(
+            F.col("query_id") < n_queries
+        )
     c = cap_hot_groups(tagged, ["band", "bucket"], id_col, max_bucket).select(
         F.col(id_col).alias("neighbor_id"), "band", "bucket"
     )
-    cand = (
-        c.join(F.broadcast(q), ["band", "bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                    _norm(F.col(vec_col)).alias("qn"))
-    cv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                    _norm(F.col(vec_col)).alias("cn"))
-    joined = cand.join(F.broadcast(qv.where(F.col("query_id") < n_queries)), "query_id").join(cv, "neighbor_id")
+    cand = c.join(F.broadcast(q), ["band", "bucket"])
+    if n_queries is not None:
+        cand = cand.where(F.col("neighbor_id") != F.col("query_id"))
+    cand = cand.select("query_id", "neighbor_id").distinct()
+    qv = qv.withColumn("qn", _norm(F.col("qv")))
+    cv = vecs.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
+                     _norm(F.col(vec_col)).alias("cn"))
+    joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
     return _rank_topk(joined, k)

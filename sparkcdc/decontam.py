@@ -44,10 +44,6 @@ from .derived import IncrementalIndex
 from .icebox import IceboxTable
 from .session import spread_scan
 
-import json
-
-_META_NAME = "ngramindex.json"
-
 DEFAULT_N = 8
 
 
@@ -180,9 +176,10 @@ class NgramIndex(IncrementalIndex):
     batch only, folded in through the exactly-once change-feed refresh
     shared with SignatureIndex/VectorIndex."""
 
+    SPEC_FILE = "ngramindex.json"
+
     def __init__(self, spark: SparkSession, table: IceboxTable, *, n: int):
-        self.spark = spark
-        self.table = table
+        super().__init__(spark, table)
         self.n = n
 
     # ---------------- lifecycle ----------------
@@ -200,20 +197,10 @@ class NgramIndex(IncrementalIndex):
     ) -> "NgramIndex":
         if n < 1:
             raise ValueError(f"n must be >= 1, got {n}")
-        table = IceboxTable.create(
+        return cls._create(
             spark, path, _index_schema(key_type), key="doc_id",
-            n_buckets=n_buckets, store=store,
+            n_buckets=n_buckets, store=store, spec={"n": n},
         )
-        table._store.put(_META_NAME, json.dumps({"n": n}).encode())
-        return cls(spark, table, n=n)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "NgramIndex":
-        table = IceboxTable.load(spark, path, store=store)
-        meta = json.loads(table._store.get(_META_NAME))
-        return cls(spark, table, n=int(meta["n"]))
 
     # ---------------- incremental maintenance ----------------
 

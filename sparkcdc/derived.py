@@ -35,16 +35,29 @@ snapshot is pinned under the reserved provisional name
 ``<consumer>#bootstrap`` BEFORE the merge. ``advance_pin`` swaps it for
 the real pin, so a crash in between re-reads the same window (fenced)
 rather than folding a newer full state over the first one.
+
+Every derived table also shares one lifecycle, on ``IncrementalIndex``:
+a table's ``create`` builds only its schema and spec dict and hands them
+to ``_create``, which creates the icebox table and writes the spec as a
+JSON sidecar (``SPEC_FILE``) in the table's metadata store; ``load``
+reads that sidecar back. Both build the instance from the persisted spec
+and keep it as ``spec``. The engine opens every derived table it
+maintains through one create-or-load, ``CDCEngine._open_derived``, which
+compares the persisted spec with the one the config asks for and raises
+``ConfigError`` on a mismatch — a reopened table never keeps maintaining
+a spec the operator believes was changed.
 """
 
 from __future__ import annotations
 
 import contextlib
 import contextvars
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .commitstore import CommitStore
 from .icebox import IceboxTable, net_of_cdf
 from .session import materialize, release
 
@@ -180,6 +193,10 @@ class IncrementalIndex:
     rather than stored degenerate."""
 
     table: IceboxTable
+    # name of the spec sidecar in the table's metadata store
+    SPEC_FILE: str
+    # the persisted spec the instance was built from (set by _open)
+    spec: dict
 
     # fold MOR delta files back into bucket bases once more than this many
     # accumulate (the engine's compact_delta_files discipline):
@@ -188,9 +205,42 @@ class IncrementalIndex:
     # folding, read-time LWW resolution degrades as deltas stack up
     compact_delta_files: int = 32
 
+    def __init__(self, spark, table: IceboxTable):
+        self.spark = spark
+        self.table = table
+
     @staticmethod
     def table_exists(path: str) -> bool:
         return IceboxTable.exists(path)
+
+    @classmethod
+    def _create(
+        cls, spark, path: str, schema, *, key: str, n_buckets: int,
+        store: CommitStore | None, spec: dict,
+    ):
+        """Create the table at ``path`` and persist ``spec`` (the keyword
+        arguments of the constructor) in its ``SPEC_FILE`` sidecar."""
+        table = IceboxTable.create(
+            spark, path, schema, key=key, n_buckets=n_buckets, store=store
+        )
+        raw = json.dumps(spec).encode()
+        table._store.put(cls.SPEC_FILE, raw)
+        return cls._open(spark, table, raw)
+
+    @classmethod
+    def load(cls, spark, path: str, *, store: CommitStore | None = None):
+        """Open an existing table with the spec persisted at its creation."""
+        table = IceboxTable.load(spark, path, store=store)
+        return cls._open(spark, table, table._store.get(cls.SPEC_FILE))
+
+    @classmethod
+    def _open(cls, spark, table: IceboxTable, raw: bytes):
+        # create and load both build from the persisted bytes, so a fresh
+        # handle and a reopened one carry the same spec
+        spec = json.loads(raw)
+        obj = cls(spark, table, **spec)
+        obj.spec = spec
+        return obj
 
     def _compact_if_needed(self, m: dict) -> dict:
         if too_many_deltas(self.table, self.compact_delta_files):

@@ -151,7 +151,7 @@ class CDCEngine:
         # batch range (see _prefetch_probe_stats)
         self._probe_stats: dict[tuple[int, int], dict] = {}
         tbl_schema = self.table.schema
-        self.sigindex = None
+        self.sigindex = self.packed = self.aggview = self.vecindex = None
         if cfg.sigindex_path:
             from .sigindex import SignatureIndex
 
@@ -166,14 +166,10 @@ class CDCEngine:
                     "continuous index maintenance requires key='doc_id' "
                     "(the dedup family's document identity column)"
                 )
-            if SignatureIndex.table_exists(cfg.sigindex_path):
-                self.sigindex = SignatureIndex.load(spark, cfg.sigindex_path)
-            else:
-                self.sigindex = SignatureIndex.create(
-                    spark, cfg.sigindex_path,
-                    key_type=tbl_schema[cfg.key].dataType,
-                )
-        self.packed = None
+            self.sigindex = self._open_derived(
+                SignatureIndex, cfg.sigindex_path, {},
+                key_type=tbl_schema[cfg.key].dataType,
+            )
         if cfg.packed_path:
             from .packing import PackedTable
 
@@ -195,54 +191,33 @@ class CDCEngine:
                     f"packed_tokens_col {cfg.packed_tokens_col!r} must be a "
                     f"string or array column, got {tok_dt.simpleString()}"
                 )
-            if PackedTable.table_exists(cfg.packed_path):
-                self.packed = PackedTable.load(spark, cfg.packed_path)
-            else:
-                self.packed = PackedTable.create(
-                    spark, cfg.packed_path, seq_len=cfg.packed_seq_len,
-                    shard_type=tbl_schema[cfg.packed_shard_col].dataType,
-                    token_type=token_type, id_col=cfg.key,
-                    tokens_col=cfg.packed_tokens_col,
-                    shard_col=cfg.packed_shard_col,
-                )
+            self.packed = self._open_derived(
+                PackedTable, cfg.packed_path,
+                {"seq_len": int(cfg.packed_seq_len), "id_col": cfg.key,
+                 "tokens_col": cfg.packed_tokens_col,
+                 "shard_col": cfg.packed_shard_col},
+                shard_type=tbl_schema[cfg.packed_shard_col].dataType,
+                token_type=token_type,
+            )
         self._bootstrap_lsn_cache: int | None = None
         # dead-letter splitting is on whenever a DLQ is configured; run()
         # turns it off for the whole run when the WAL's parquet footers
         # prove zero nulls in (key, op, seq) — the clean common case then
         # pays nothing per batch
         self._dlq_split = bool(cfg.dlq_path)
-        self.aggview = None
         if cfg.aggview_path:
             from .aggview import AggSpecError, AggView
 
-            want_groups = list(cfg.aggview_group_cols or [])
-            want_aggs = {
-                k: (v[0], v[1]) for k, v in (cfg.aggview_aggs or {}).items()
-            }
-            if AggView.table_exists(cfg.aggview_path):
-                self.aggview = AggView.load(spark, cfg.aggview_path)
-                # a loaded view keeps maintaining its PERSISTED spec; a
-                # silently-ignored config change would leave the operator
-                # believing the new spec is live — fail loudly instead
-                have_groups, have_aggs = self.aggview.group_cols, self.aggview.aggs
-                if (have_groups, have_aggs) != (want_groups, want_aggs):
-                    raise ConfigError(
-                        f"aggview at {cfg.aggview_path!r} was created with "
-                        f"group_cols={have_groups}, "
-                        f"aggs={have_aggs}, but the config now declares "
-                        f"group_cols={want_groups}, aggs={want_aggs} — drop "
-                        f"the view (or point aggview_path elsewhere) to "
-                        f"change its spec"
-                    )
-            else:
-                try:
-                    self.aggview = AggView.create(
-                        spark, cfg.aggview_path, group_cols=want_groups,
-                        aggs=want_aggs, source_schema=tbl_schema,
-                    )
-                except AggSpecError as exc:
-                    raise ConfigError(f"aggview spec invalid: {exc}") from exc
-        self.vecindex = None
+            try:
+                self.aggview = self._open_derived(
+                    AggView, cfg.aggview_path,
+                    {"group_cols": list(cfg.aggview_group_cols or []),
+                     "aggs": {k: [v[0], v[1]]
+                              for k, v in (cfg.aggview_aggs or {}).items()}},
+                    source_schema=tbl_schema,
+                )
+            except AggSpecError as exc:
+                raise ConfigError(f"aggview spec invalid: {exc}") from exc
         if cfg.vecindex_path:
             from .vecindex import VectorIndex
 
@@ -258,18 +233,41 @@ class CDCEngine:
                     f"vecindex_vec_col {cfg.vecindex_vec_col!r} must be an "
                     f"array column of the table payload {tbl_schema.names}"
                 )
-            if VectorIndex.table_exists(cfg.vecindex_path):
-                self.vecindex = VectorIndex.load(spark, cfg.vecindex_path)
-            else:
-                if cfg.vecindex_dim is None:
-                    raise ConfigError(
-                        "vecindex_dim is required to create a new vector "
-                        "index (the plane family is frozen at creation)"
-                    )
-                self.vecindex = VectorIndex.create(
-                    spark, cfg.vecindex_path, dim=cfg.vecindex_dim,
-                    key_type=tbl_schema[cfg.key].dataType,
+            if cfg.vecindex_dim is None and not VectorIndex.table_exists(
+                cfg.vecindex_path
+            ):
+                raise ConfigError(
+                    "vecindex_dim is required to create a new vector "
+                    "index (the plane family is frozen at creation)"
                 )
+            # an unset dim means "use the stored one"
+            self.vecindex = self._open_derived(
+                VectorIndex, cfg.vecindex_path,
+                {} if cfg.vecindex_dim is None else {"dim": cfg.vecindex_dim},
+                key_type=tbl_schema[cfg.key].dataType,
+            )
+
+    def _open_derived(self, cls, path: str, want: dict, **create_kw):
+        """The one create-or-load of a derived table: ``cls.create`` with
+        the spec fields ``want`` and the schema arguments ``create_kw``
+        when no table exists at ``path``; otherwise ``cls.load``, and
+        every field of ``want`` must equal the persisted spec. A loaded
+        table keeps maintaining its PERSISTED spec, so a changed config
+        would be silently ignored — it raises ``ConfigError`` instead."""
+        if not cls.table_exists(path):
+            return cls.create(self.spark, path, **want, **create_kw)
+        d = cls.load(self.spark, path)
+        drift = [k for k, v in want.items() if d.spec.get(k) != v]
+        if drift:
+            raise ConfigError(
+                f"{cls.__name__} at {path!r} was created with spec "
+                + ", ".join(f"{k}={d.spec.get(k)!r}" for k in drift)
+                + ", but the config now asks for "
+                + ", ".join(f"{k}={want[k]!r}" for k in drift)
+                + " — drop the table (or point its path elsewhere) to "
+                "change its spec"
+            )
+        return d
 
     # ---------------- planning ----------------
 

@@ -1311,18 +1311,7 @@ class IceboxTable:
             ):
                 warnings.append(f"missing bloom sidecar (degraded): {e['bloom']}")
 
-        live = {e["path"] for s in snaps for e in s["manifest"]}
-        live |= {
-            e["path"] for info in staged.values()
-            for e in info["delta"].get("added", [])
-        }
-        orphans = 0
-        for fpath in glob.glob(
-            os.path.join(self.path, "data", "c*", "**", "*.parquet"),
-            recursive=True,
-        ):
-            if os.path.relpath(fpath, self.path) not in live:
-                orphans += 1
+        orphans = len(self._orphans(snaps, staged)[1]())
         if orphans:
             warnings.append(
                 f"{orphans} unreferenced data file(s) on disk — debris from "
@@ -1336,6 +1325,28 @@ class IceboxTable:
             "files_checked": len(by_path),
             "orphans": orphans,
         }
+
+    def _orphans(self, snaps: list, staged: dict) -> tuple:
+        """``(live, orphans)``: the data paths (relative to the table) that
+        a snapshot in ``snaps`` or a staged write-audit-publish delta
+        references, and a function listing the data files on disk
+        (absolute paths) that none of them references — the one orphan
+        definition, counted by ``fsck`` and deleted by
+        ``expire_snapshots(sweep_orphans=True)``. Staged-but-unpublished
+        deltas reference files no snapshot knows about yet: they are
+        metadata-referenced, not orphans, regardless of age (audits may
+        outlive any grace window)."""
+        live = {e["path"] for s in snaps for e in s["manifest"]}
+        live |= {
+            e["path"] for info in staged.values()
+            for e in info["delta"].get("added", [])
+        }
+        return live, lambda: [
+            f for f in glob.glob(
+                os.path.join(self.path, "data", "c*", "**", "*.parquet"), recursive=True
+            )
+            if os.path.relpath(f, self.path) not in live
+        ]
 
     def expire_snapshots(
         self,
@@ -1393,14 +1404,7 @@ class IceboxTable:
                         clamped_tags = True
                     kept = [s for s in snaps if s["snapshot_id"] >= floor]
                     dropped = [s for s in snaps if s["snapshot_id"] < floor]
-        live = {e["path"] for s in kept for e in s["manifest"]}
-        # staged-but-unpublished WAP commits reference data files no
-        # snapshot knows about yet — they are METADATA-referenced, not
-        # orphans, regardless of age (audits may outlive any grace window)
-        live |= {
-            e["path"] for info in self.staged().values()
-            for e in info["delta"].get("added", [])
-        }
+        live, orphan_files = self._orphans(kept, self.staged())
         dead = {e["path"] for s in dropped for e in s["manifest"]} - live
         for rel in dead:
             for p in (os.path.join(self.path, rel),
@@ -1427,10 +1431,7 @@ class IceboxTable:
             if hasattr(self._store, "sweep_debris"):
                 orphans += self._store.sweep_debris(orphan_grace_sec)
             now = _time.time()
-            for fpath in glob.glob(os.path.join(self.path, "data", "c*", "**", "*.parquet"),
-                                   recursive=True):
-                if os.path.relpath(fpath, self.path) in live:
-                    continue
+            for fpath in orphan_files():
                 try:
                     # age gate: a file younger than the grace window may be
                     # an in-flight merge's uncommitted output — skip it

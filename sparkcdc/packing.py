@@ -26,8 +26,6 @@ Everything else is native Catalyst: one window, one explode of at most
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -198,9 +196,6 @@ def export_training_set(
     return {"rows": n, "out_path": out_path}
 
 
-_PACK_META_NAME = "packidx.json"
-
-
 class PackedTable(IncrementalIndex):
     """Packed training sequences as a DERIVED icebox table, maintained
     incrementally from the source doc table's change feed — the packing
@@ -232,13 +227,17 @@ class PackedTable(IncrementalIndex):
     ``tokens``, ``n_tok``, ``n_docs``. Documents with a NULL shard are
     outside every stream and are never packed."""
 
-    def __init__(self, spark: SparkSession, table: IceboxTable, *, meta: dict):
-        self.spark = spark
-        self.table = table
-        self.seq_len = int(meta["seq_len"])
-        self.id_col = meta["id_col"]
-        self.tokens_col = meta["tokens_col"]
-        self.shard_col = meta["shard_col"]
+    SPEC_FILE = "packidx.json"
+
+    def __init__(
+        self, spark: SparkSession, table: IceboxTable, *,
+        seq_len: int, id_col: str, tokens_col: str, shard_col: str,
+    ):
+        super().__init__(spark, table)
+        self.seq_len = int(seq_len)
+        self.id_col = id_col
+        self.tokens_col = tokens_col
+        self.shard_col = shard_col
 
     # ---------------- lifecycle ----------------
 
@@ -269,25 +268,11 @@ class PackedTable(IncrementalIndex):
                 T.StructField("n_docs", T.LongType()),
             ]
         )
-        table = IceboxTable.create(
-            spark, path, schema, key="pack_id", n_buckets=n_buckets, store=store
+        return cls._create(
+            spark, path, schema, key="pack_id", n_buckets=n_buckets, store=store,
+            spec={"seq_len": int(seq_len), "id_col": id_col,
+                  "tokens_col": tokens_col, "shard_col": shard_col},
         )
-        meta = {
-            "seq_len": int(seq_len),
-            "id_col": id_col,
-            "tokens_col": tokens_col,
-            "shard_col": shard_col,
-        }
-        table._store.put(_PACK_META_NAME, json.dumps(meta).encode())
-        return cls(spark, table, meta=meta)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "PackedTable":
-        table = IceboxTable.load(spark, path, store=store)
-        meta = json.loads(table._store.get(_PACK_META_NAME))
-        return cls(spark, table, meta=meta)
 
     # ---------------- incremental maintenance ----------------
 

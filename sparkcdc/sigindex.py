@@ -30,8 +30,6 @@ document and band parameters can be re-derived without a rebuild.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,9 +54,6 @@ from .derived import IncrementalIndex
 from .icebox import IceboxTable
 from .session import materialize, release
 
-_META_NAME = "sigindex.json"
-_SIM_META_NAME = "simindex.json"
-
 
 def _index_schema(k: int, key_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -75,9 +70,10 @@ class SignatureIndex(IncrementalIndex):
     prober derives the same hash family.
     """
 
+    SPEC_FILE = "sigindex.json"
+
     def __init__(self, spark: SparkSession, table: IceboxTable, *, k: int, bands: int):
-        self.spark = spark
-        self.table = table
+        super().__init__(spark, table)
         self.k = k
         self.bands = bands
 
@@ -97,20 +93,10 @@ class SignatureIndex(IncrementalIndex):
     ) -> "SignatureIndex":
         if k % bands:
             raise ValueError(f"k={k} must be divisible by bands={bands}")
-        table = IceboxTable.create(
+        return cls._create(
             spark, path, _index_schema(k, key_type), key="doc_id",
-            n_buckets=n_buckets, store=store,
+            n_buckets=n_buckets, store=store, spec={"k": k, "bands": bands},
         )
-        table._store.put(_META_NAME, json.dumps({"k": k, "bands": bands}).encode())
-        return cls(spark, table, k=k, bands=bands)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "SignatureIndex":
-        table = IceboxTable.load(spark, path, store=store)
-        meta = json.loads(table._store.get(_META_NAME))
-        return cls(spark, table, k=int(meta["k"]), bands=int(meta["bands"]))
 
     # ---------------- incremental maintenance ----------------
 
@@ -219,9 +205,12 @@ class SimhashIndex(IncrementalIndex):
     (a projection), mirroring SignatureIndex's derived band keys — the
     index never stores band layout."""
 
-    def __init__(self, spark: SparkSession, table: IceboxTable):
-        self.spark = spark
-        self.table = table
+    SPEC_FILE = "simindex.json"
+
+    def __init__(self, spark: SparkSession, table: IceboxTable, *, family: str):
+        if family != "native":
+            raise ValueError(f"unknown simhash family {family!r} (only 'native')")
+        super().__init__(spark, table)
 
     @classmethod
     def create(
@@ -236,19 +225,10 @@ class SimhashIndex(IncrementalIndex):
         schema = T.StructType(
             [T.StructField("doc_id", key_type), T.StructField("sim", T.LongType())]
         )
-        table = IceboxTable.create(
-            spark, path, schema, key="doc_id", n_buckets=n_buckets, store=store
+        return cls._create(
+            spark, path, schema, key="doc_id", n_buckets=n_buckets, store=store,
+            spec={"family": "native"},
         )
-        table._store.put(_SIM_META_NAME, json.dumps({"family": "native"}).encode())
-        return cls(spark, table)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "SimhashIndex":
-        table = IceboxTable.load(spark, path, store=store)
-        json.loads(table._store.get(_SIM_META_NAME))  # existence = format check
-        return cls(spark, table)
 
     # ---------------- incremental maintenance ----------------
 

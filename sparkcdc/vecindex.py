@@ -23,26 +23,14 @@ identically; changing the family means building a new index.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ann import (
-    _norm,
-    _rank_topk,
-    band_seed,
-    cap_hot_groups,
-    default_bucket_cap,
-    lsh_bucket_expr,
-    lsh_planes,
-)
+from .ann import _lsh_topk, band_seed, default_bucket_cap, lsh_bucket_expr, lsh_planes
 from .commitstore import CommitStore
 from .derived import IncrementalIndex
 from .icebox import IceboxTable
-
-_META_NAME = "vecindex.json"
 
 
 def _index_schema(n_bands: int, key_type: T.DataType) -> T.StructType:
@@ -58,6 +46,8 @@ def _index_schema(n_bands: int, key_type: T.DataType) -> T.StructType:
 class VectorIndex(IncrementalIndex):
     """Persistent sign-random-projection ANN index over a vector corpus."""
 
+    SPEC_FILE = "vecindex.json"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -68,8 +58,7 @@ class VectorIndex(IncrementalIndex):
         n_bands: int,
         seed: int,
     ):
-        self.spark = spark
-        self.table = table
+        super().__init__(spark, table)
         self.dim = dim
         self.n_planes = n_planes
         self.n_bands = n_bands
@@ -91,27 +80,10 @@ class VectorIndex(IncrementalIndex):
         key_type: T.DataType = T.LongType(),
         store: CommitStore | None = None,
     ) -> "VectorIndex":
-        table = IceboxTable.create(
+        return cls._create(
             spark, path, _index_schema(n_bands, key_type), key="vec_id",
             n_buckets=n_buckets, store=store,
-        )
-        table._store.put(
-            _META_NAME,
-            json.dumps(
-                {"dim": dim, "n_planes": n_planes, "n_bands": n_bands, "seed": seed}
-            ).encode(),
-        )
-        return cls(spark, table, dim=dim, n_planes=n_planes, n_bands=n_bands, seed=seed)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, path: str, *, store: CommitStore | None = None
-    ) -> "VectorIndex":
-        table = IceboxTable.load(spark, path, store=store)
-        meta = json.loads(table._store.get(_META_NAME))
-        return cls(
-            spark, table, dim=int(meta["dim"]), n_planes=int(meta["n_planes"]),
-            n_bands=int(meta["n_bands"]), seed=int(meta["seed"]),
+            spec={"dim": dim, "n_planes": n_planes, "n_bands": n_bands, "seed": seed},
         )
 
     # ---------------- incremental maintenance ----------------
@@ -165,6 +137,15 @@ class VectorIndex(IncrementalIndex):
             ).alias("band", "bucket"),
         )
 
+    def _bucket_cap(self, max_bucket: int | None) -> int:
+        """``max_bucket``, or when None the default hot-bucket cap sized
+        from the index's own manifest row stats (no count job)."""
+        if max_bucket is not None:
+            return max_bucket
+        self.table.refresh()
+        n_rows = sum(e["rows"] for e in self.table.snapshot["manifest"])
+        return default_bucket_cap(n_rows, 2 ** self.n_planes)
+
     def ann_topk(
         self,
         *,
@@ -179,34 +160,11 @@ class VectorIndex(IncrementalIndex):
         projection and exact cosines from the stored vectors. ``max_bucket``
         is the same candidate-side hot-bucket cap; ``None`` derives the
         default from the index's own manifest row stats (no count job)."""
-        self.table.refresh()
-        if max_bucket is None:
-            n_rows = sum(e["rows"] for e in self.table.snapshot["manifest"])
-            max_bucket = default_bucket_cap(n_rows, 2 ** self.n_planes)
-        tagged = self.tagged()
-        q = tagged.where(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"), "band", "bucket"
+        return _lsh_topk(
+            self.tagged(), self.table.read(), k=k,
+            max_bucket=self._bucket_cap(max_bucket), id_col="vec_id",
+            vec_col="embedding", n_queries=n_queries,
         )
-        c = cap_hot_groups(tagged, ["band", "bucket"], "vec_id", max_bucket).select(
-            F.col("vec_id").alias("neighbor_id"), "band", "bucket"
-        )
-        cand = (
-            c.join(F.broadcast(q), ["band", "bucket"])
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        vecs = self.table.read().select("vec_id", "embedding")
-        qv = vecs.where(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
-            _norm(F.col("embedding")).alias("qn"),
-        )
-        cv = vecs.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
-            _norm(F.col("embedding")).alias("cn"),
-        )
-        joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-        return _rank_topk(joined, k)
 
     def probe_topk(
         self,
@@ -222,32 +180,15 @@ class VectorIndex(IncrementalIndex):
         and exact cosines come from the index. The ingest-time "find my
         neighbors before committing" path: per-query-set cost is
         O(queries · hashing + index scan), not O(corpus · hashing)."""
-        self.table.refresh()
-        if max_bucket is None:
-            n_rows = sum(e["rows"] for e in self.table.snapshot["manifest"])
-            max_bucket = default_bucket_cap(n_rows, 2 ** self.n_planes)
+        max_bucket = self._bucket_cap(max_bucket)
         qtag = queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).cast("array<float>").alias("qv"),
-            F.posexplode(
-                F.array(*[c for c in self._bucket_cols(vec_col)])
-            ).alias("band", "bucket"),
+            F.posexplode(F.array(*self._bucket_cols(vec_col))).alias("band", "bucket"),
         )
-        c = cap_hot_groups(self.tagged(), ["band", "bucket"], "vec_id", max_bucket).select(
-            F.col("vec_id").alias("neighbor_id"), "band", "bucket"
+        return _lsh_topk(
+            self.tagged(), self.table.read(), k=k, max_bucket=max_bucket,
+            id_col="vec_id", vec_col="embedding",
+            queries=(qtag.select("query_id", "band", "bucket"),
+                     qtag.select("query_id", "qv").distinct()),
         )
-        cand = (
-            c.join(F.broadcast(qtag.select("query_id", "band", "bucket")),
-                   ["band", "bucket"])
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        qv = qtag.select("query_id", "qv").distinct().withColumn(
-            "qn", _norm(F.col("qv"))
-        )
-        cv = self.table.read().select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
-            _norm(F.col("embedding")).alias("cn"),
-        )
-        joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-        return _rank_topk(joined, k)

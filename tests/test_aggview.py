@@ -615,3 +615,54 @@ def test_engine_rejects_changed_spec_for_existing_view(spark, tmp_path):
         }))
     with pytest.raises(ConfigError, match="spec"):
         CDCEngine(spark, JobConfig(**{**base, "aggview_group_cols": ["op"]}))
+
+
+def test_engine_rejects_changed_spec_for_existing_packed_table(spark, tmp_path):
+    """The packed sibling of the view check above: a packed table keeps
+    maintaining the spec it was created with, so reopening it under a
+    different ``packed_seq_len`` or ``packed_shard_col`` raises instead
+    of silently packing with the old one."""
+    from sparkcdc.changelog import generate_changelog, write_log_parquet
+    from sparkcdc.config import ConfigError, JobConfig
+    from sparkcdc.engine import CDCEngine
+
+    wal_path = str(tmp_path / "wal")
+    write_log_parquet(generate_changelog(spark, 200, 20, seed=3), wal_path)
+    base = dict(
+        log_path=wal_path, table_path=str(tmp_path / "tbl"), n_buckets=2,
+        packed_path=str(tmp_path / "pk"), packed_seq_len=32,
+        packed_tokens_col="tokens", packed_shard_col="source",
+    )
+    CDCEngine(spark, JobConfig(**base))  # creates
+    # the same spec reloads fine
+    assert CDCEngine(spark, JobConfig(**base)).packed.seq_len == 32
+    with pytest.raises(ConfigError, match="spec") as exc:
+        CDCEngine(spark, JobConfig(**{**base, "packed_seq_len": 64}))
+    assert "seq_len=32" in str(exc.value) and "seq_len=64" in str(exc.value)
+    with pytest.raises(ConfigError, match="spec"):
+        CDCEngine(spark, JobConfig(**{**base, "packed_shard_col": "n_tok"}))
+
+
+def test_engine_rejects_changed_spec_for_existing_vector_index(spark, tmp_path):
+    """The vector sibling: a changed ``vecindex_dim`` raises (the index
+    would otherwise drop every vector of the new width), while an
+    omitted one reuses the stored dim."""
+    from sparkcdc.config import ConfigError, JobConfig
+    from sparkcdc.engine import CDCEngine
+
+    wal_path = str(tmp_path / "wal")
+    spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, -1.0], i + 1, "upsert") for i in range(8)],
+        "vec_id long, embedding array<float>, seq long, op string",
+    ).write.parquet(wal_path)
+    base = dict(
+        log_path=wal_path, table_path=str(tmp_path / "tbl"), n_buckets=2,
+        key="vec_id", vecindex_path=str(tmp_path / "vidx"), vecindex_dim=4,
+    )
+    CDCEngine(spark, JobConfig(**base))  # creates
+    CDCEngine(spark, JobConfig(**base))  # same spec reloads fine
+    omitted = CDCEngine(spark, JobConfig(**{**base, "vecindex_dim": None}))
+    assert omitted.vecindex.dim == 4
+    with pytest.raises(ConfigError, match="spec") as exc:
+        CDCEngine(spark, JobConfig(**{**base, "vecindex_dim": 8}))
+    assert "dim=4" in str(exc.value) and "dim=8" in str(exc.value)
