@@ -125,18 +125,6 @@ def _view_schema(
     return T.StructType(fields)
 
 
-_INT_RANK = {T.ByteType: 0, T.ShortType: 1, T.IntegerType: 2, T.LongType: 3}
-
-
-def _is_widening(old: T.DataType, new: T.DataType) -> bool:
-    to, tn = type(old), type(new)
-    if to in _INT_RANK and tn in _INT_RANK:
-        return _INT_RANK[tn] > _INT_RANK[to]
-    if to in _INT_RANK and tn in (T.FloatType, T.DoubleType):
-        return True
-    return isinstance(old, T.FloatType) and isinstance(new, T.DoubleType)
-
-
 class AggView(IncrementalIndex):
     """A persistent GROUP BY rollup of a source icebox table, maintained
     incrementally from the source's change feed (see module docstring)."""
@@ -221,34 +209,28 @@ class AggView(IncrementalIndex):
         return exprs
 
     def _evolve_with_source(self, src_table: IceboxTable) -> None:
-        """Track source schema evolution: when a group or measure column
-        WIDENED (int family upward, int→float, float→double), widen the
-        view's corresponding stored columns before folding the window —
-        the frozen view schema would otherwise silently WRAP wide values
-        through the merge's normalization cast (the same corruption class
-        PackedTable guards against, packing.py). Non-widening changes
-        raise a typed error; columns the spec does not reference are
-        ignored (added source columns cost nothing here)."""
+        """Track source schema evolution: a widened measure column widens
+        the view's stored column before the window folds — the frozen
+        view schema would otherwise silently WRAP wide values through the
+        merge's normalization cast. The view table's ``update_schema``
+        enforces the widening rule (a non-widening change raises there,
+        and the source's own ``update_schema`` refused it first); it
+        returns early when nothing changed. A group column may not change
+        type at all: ``_gk`` digests the group values' JSON text, and
+        ``1`` and ``1.0`` would name two groups."""
         _validate_specs(self.group_cols, self.aggs, src_table.schema)
-        want = _view_schema(self.group_cols, self.aggs, src_table.schema)
         have = self.table.schema
-        changed = [
-            (f.name, have[f.name].dataType, f.dataType)
-            for f in want.fields
-            if f.name in have.names and have[f.name].dataType != f.dataType
-        ]
-        if not changed:
-            return
-        for name, old, new in changed:
-            if not _is_widening(old, new):
+        for c in self.group_cols:
+            old, new = have[c].dataType, src_table.schema[c].dataType
+            if old.simpleString() != new.simpleString():
                 raise AggSpecError(
-                    f"source schema change is not a widening for view column "
-                    f"{name!r}: {old.simpleString()} -> {new.simpleString()} — "
-                    f"rebuild the view for type changes the stored state "
-                    f"cannot absorb"
+                    f"source group column {c!r} changed type "
+                    f"{old.simpleString()} -> {new.simpleString()}: the view "
+                    f"keys groups by their JSON text — rebuild the view"
                 )
-        self.table.update_schema(want)
-        self.table.refresh()
+        self.table.update_schema(
+            _view_schema(self.group_cols, self.aggs, src_table.schema)
+        )
 
     def refresh_from(
         self, src_table: IceboxTable, *, consumer: str = "aggview"

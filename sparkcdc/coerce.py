@@ -165,6 +165,16 @@ def coerce_json(col: Column, dt: T.DataType) -> Column:
     return F.lit(None).cast("string")
 
 
+# embulk column type → the Spark type its coerced column carries
+EMBULK_TO_SPARK = {
+    "boolean": T.BooleanType(),
+    "long": T.LongType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "timestamp": T.TimestampType(),
+    "json": T.StringType(),
+}
+
 _COERCERS = {
     "boolean": coerce_boolean,
     "long": coerce_long,
@@ -194,9 +204,7 @@ def coerce_columns(df, columns: list[dict], *, keep: list[str] | None = None):
         name, typ = spec["name"], spec["type"]
         col, dt = resolve_path(df.schema, name)
         if col is None:
-            spark_t = {"boolean": "boolean", "long": "long", "double": "double",
-                       "string": "string", "timestamp": "timestamp", "json": "string"}[typ]
-            exprs.append(F.lit(None).cast(spark_t).alias(name))
+            exprs.append(F.lit(None).cast(EMBULK_TO_SPARK[typ]).alias(name))
             continue
         fn = _COERCERS[typ]
         out = fn(col, dt, spec.get("format")) if typ == "timestamp" else fn(col, dt)

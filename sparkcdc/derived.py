@@ -53,11 +53,12 @@ from __future__ import annotations
 import contextlib
 import contextvars
 import json
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .commitstore import CommitStore
+from .commitstore import CommitStore, PosixCommitStore
 from .icebox import IceboxTable, net_of_cdf
 from .session import materialize, release
 
@@ -219,12 +220,17 @@ class IncrementalIndex:
         store: CommitStore | None, spec: dict,
     ):
         """Create the table at ``path`` and persist ``spec`` (the keyword
-        arguments of the constructor) in its ``SPEC_FILE`` sidecar."""
+        arguments of the constructor) in its ``SPEC_FILE`` sidecar. The
+        sidecar is written first: the table becomes visible
+        (``table_exists``) only once it can also be loaded, so a crash in
+        between leaves a directory the next create simply reuses."""
+        if store is None:
+            store = PosixCommitStore(os.path.join(os.path.abspath(path), "metadata"))
+        raw = json.dumps(spec).encode()
+        store.put(cls.SPEC_FILE, raw)
         table = IceboxTable.create(
             spark, path, schema, key=key, n_buckets=n_buckets, store=store
         )
-        raw = json.dumps(spec).encode()
-        table._store.put(cls.SPEC_FILE, raw)
         return cls._open(spark, table, raw)
 
     @classmethod

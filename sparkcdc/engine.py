@@ -85,21 +85,13 @@ def is_retryable(exc: BaseException) -> bool:
     return True  # unknown / IO / network → transient, retry
 
 
-_EMBULK_TO_SPARK = {
-    "boolean": T.BooleanType(),
-    "long": T.LongType(),
-    "double": T.DoubleType(),
-    "string": T.StringType(),
-    "timestamp": T.TimestampType(),
-    "json": T.StringType(),
-}
-
-
 def schema_from_columns(columns: list[dict]) -> T.StructType:
     """Declared column specs → table schema (the reference's fixed-schema
     mode, README.md:33-47 `columns:`)."""
+    from .coerce import EMBULK_TO_SPARK
+
     return T.StructType(
-        [T.StructField(c["name"], _EMBULK_TO_SPARK[c["type"]], True) for c in columns]
+        [T.StructField(c["name"], EMBULK_TO_SPARK[c["type"]], True) for c in columns]
     )
 
 
@@ -399,11 +391,7 @@ class CDCEngine:
                 # evolve FIRST: if the re-guess implies an incompatible
                 # change, detect_evolution raises and the caller-owned
                 # JobConfig keeps its previous (adopted) column set
-                evolved, changes = detect_evolution(
-                    self.table.schema, schema_from_columns(new_cols)
-                )
-                if evolved is not None:
-                    self.table.update_schema(evolved)
+                changes = self._evolve_table(schema_from_columns(new_cols))
                 self.cfg.columns = new_cols
                 return changes
             # a key-less guess is rejected, visibly (not a silent no-op):
@@ -435,14 +423,17 @@ class CDCEngine:
                 fields.append(T.StructField(f.name, f.dataType, True))
         if not fields:
             return []
-        evolved, changes = detect_evolution(self.table.schema, T.StructType(fields))
-        if evolved is not None:
-            self.table.update_schema(evolved)
-        return changes
+        return self._evolve_table(T.StructType(fields))
 
     def _maybe_evolve(self, batch: DataFrame) -> list[str]:
         ignore = {self.cfg.seq_col, self.cfg.op_col, self.cfg.ts_col}
-        evolved, changes = detect_evolution(self.table.schema, batch.schema, ignore=ignore)
+        return self._evolve_table(batch.schema, ignore=ignore)
+
+    def _evolve_table(self, incoming: T.StructType, *, ignore=frozenset()) -> list[str]:
+        """Commit the add/widen evolution ``incoming`` implies (one
+        schema-update commit, none when nothing changes); returns the
+        change descriptions. Incompatible changes raise before any commit."""
+        evolved, changes = detect_evolution(self.table.schema, incoming, ignore=ignore)
         if evolved is not None:
             self.table.update_schema(evolved)
         return changes

@@ -56,6 +56,7 @@ from pyspark.sql import types as T
 
 from .commitstore import CommitStore, PosixCommitStore
 from .dedup import lww_dedup
+from .schema_infer import _widened
 
 SEQ_COL = "_seq"  # system column: last-writer LSN per row
 DELETED_COL = "_deleted"  # system column: tombstone marker
@@ -176,9 +177,11 @@ def _normalize_to(df: DataFrame, target: T.StructType, *, evolved: bool) -> Data
     """Cast/pad a (possibly old-schema) DataFrame to the target schema.
 
     Pure Catalyst casts for widen/add; when the row came from an
-    old-schema file (`evolved`), the token payload additionally goes
+    old-schema file (`evolved`), every target column typed
+    ``array<int>`` (the pass's declared output type) additionally goes
     through the vectorized Arrow normalization pass (no per-row Python)
-    required by the north rule for schema-evolution commits.
+    required by the north rule for schema-evolution commits. The pass is
+    chosen by type, never by column name.
     """
     out_cols = []
     for f in target.fields:
@@ -188,10 +191,11 @@ def _normalize_to(df: DataFrame, target: T.StructType, *, evolved: bool) -> Data
             out_cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     extra = [c for c in df.columns if c not in {f.name for f in target.fields}]
     res = df.select(*out_cols, *[F.col(c) for c in extra])
-    if evolved and "tokens" in res.columns:
+    ints = [f.name for f in target.fields if f.dataType.simpleString() == "array<int>"]
+    if evolved and ints:
         from .coerce import normalize_token_arrays  # local import: avoids cycle
 
-        res = res.withColumn("tokens", normalize_token_arrays(F.col("tokens")))
+        res = res.withColumns({c: normalize_token_arrays(F.col(c)) for c in ints})
     return res
 
 
@@ -1000,15 +1004,20 @@ class IceboxTable:
     # ---------------- schema evolution ----------------
 
     def update_schema(self, new_schema: T.StructType) -> None:
-        """Metadata-only schema commit (add column / widen type). Old data
-        files stay untouched; reads normalize them forward. Concurrent
-        schema changes serialize: on conflict the loser reloads and
-        re-applies (idempotent when the other writer made the same change).
+        """Metadata-only schema commit. Old data files stay untouched;
+        reads normalize them forward. Concurrent schema changes
+        serialize: on conflict the loser reloads and re-applies
+        (idempotent when the other writer made the same change).
 
-        The key column's type is fixed: ``bucket_expr`` hashes the key's
-        physical type (an int and a bigint of equal value land in different
-        buckets), so widening it would split each key across two buckets.
-        Such a change raises ``ValueError``."""
+        The table enforces the one evolution rule, so callers rely on it
+        rather than re-checking: every existing column stays, and each
+        one's new type is what ``schema_infer._widened(old, new)`` returns
+        (the same type, or a widening listed in ``_WIDEN_OK``); columns
+        may be added. Anything else raises ``ValueError`` naming the
+        column ("not a widening"). The key column's type is fixed:
+        ``bucket_expr`` hashes the key's physical type (an int and a
+        bigint of equal value land in different buckets), so widening it
+        would split each key across two buckets."""
         old_key = self.schema[self.key].dataType
         if self.key not in new_schema.fieldNames() or new_schema[self.key].dataType != old_key:
             raise ValueError(
@@ -1019,6 +1028,17 @@ class IceboxTable:
             snap = self._snap
             if new_schema.json() == self.schema.json():
                 return
+            # checked against the schema this attempt commits over, so a
+            # re-apply after a lost race cannot undo the winner's widening
+            for f in self.schema.fields:
+                new = new_schema[f.name].dataType if f.name in new_schema.names else None
+                w = None if new is None else _widened(f.dataType, new)
+                if w is None or w.simpleString() != new.simpleString():
+                    raise ValueError(
+                        f"schema change for column {f.name!r} is not a widening: "
+                        f"{f.dataType.simpleString()} -> "
+                        f"{'dropped' if new is None else new.simpleString()}"
+                    )
             v = snap["schema_version"] + 1
             delta = {
                 "operation": "update-schema",

@@ -300,32 +300,23 @@ class PackedTable(IncrementalIndex):
 
     def _evolve_with_source(self, src_table: IceboxTable) -> None:
         """If the source widened its token element type mid-stream (T6
-        schema evolution — e.g. array<int> → array<long>), widen the
-        packed table's tokens column FIRST: merging wider values into the
-        frozen schema would silently wrap them (int overflow), the one
-        failure mode worse than an error. Unrelated source changes (added
-        columns) need nothing — the repack projects its three columns."""
+        schema evolution — e.g. array<int> → array<long>), the packed
+        ``tokens`` column takes the source's type FIRST: merging wider
+        values into the frozen schema would silently wrap them (int
+        overflow), the one failure mode worse than an error. The packed
+        table's ``update_schema`` raises on anything but a widening.
+        Unrelated source changes (added columns) need nothing — the
+        repack projects its three columns."""
         src_dt = src_table.schema[self.tokens_col].dataType
         if not isinstance(src_dt, T.ArrayType):
             return  # string tokens_col: split() yields strings forever
         cur = self.table.schema
-        cur_el = cur["tokens"].dataType.elementType
-        if src_dt.elementType.simpleString() == cur_el.simpleString():
+        if src_dt.simpleString() == cur["tokens"].dataType.simpleString():
             return
-        from .schema_infer import _widened
-
-        w = _widened(T.ArrayType(cur_el), src_dt)
-        if w is None or w.elementType.simpleString() == cur_el.simpleString():
-            raise ValueError(
-                f"source {self.tokens_col} evolved to "
-                f"{src_dt.simpleString()}, which is not a widening of the "
-                f"packed tokens {cur_el.simpleString()} — recreate the "
-                f"packed table"
-            )
         self.table.update_schema(
             T.StructType(
                 [
-                    f if f.name != "tokens" else T.StructField("tokens", w)
+                    f if f.name != "tokens" else T.StructField("tokens", src_dt)
                     for f in cur.fields
                 ]
             )

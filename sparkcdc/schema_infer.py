@@ -103,6 +103,8 @@ def guess_columns(sample: DataFrame, sample_n: int = GUESS_RECORDS_COUNT) -> lis
 
 # ---------------- evolution ----------------
 
+# the one widening rule: IceboxTable.update_schema enforces it for every
+# table (source, packed, aggregate view), detect_evolution merges by it
 _WIDEN_OK = {
     ("int", "bigint"), ("smallint", "int"), ("smallint", "bigint"),
     ("tinyint", "smallint"), ("tinyint", "int"), ("tinyint", "bigint"),

@@ -513,18 +513,42 @@ def test_source_widening_evolves_view_schema(spark, tmp_path):
         F.max("n_tok").alias("mx")).collect())
     assert got == want
     assert any(r[3] == 2 ** 33 for r in got)  # the wide max survived intact
-    # non-widening change (long -> string) is rejected, not absorbed
+    # non-widening change (long -> string) is rejected, not absorbed: the
+    # source table refuses it before the view could see it
+    with pytest.raises(ValueError, match="not a widening"):
+        t.update_schema(T.StructType([
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("n_tok", T.StringType()),
+            T.StructField("lang", T.StringType()),
+        ]))
+
+
+def test_group_column_type_change_raises(spark, tmp_path):
+    """A group column the source widens (int -> double, legal for the
+    source) cannot be absorbed: the view keys groups by their values' JSON
+    text, so 1 and 1.0 would be two groups. The refresh raises instead of
+    splitting a group."""
+    src = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("g", T.IntegerType()),
+    ])
+    t = IceboxTable.create(spark, str(tmp_path / "t"), src, key="doc_id", n_buckets=2)
+    t.merge(spark.createDataFrame(
+        [("upsert", 1, 1, 1), ("upsert", 2, 2, 2)],
+        "op string, doc_id long, g int, seq long"), "b1")
+    view = AggView.create(
+        spark, str(tmp_path / "v"), group_cols=["g"],
+        aggs={"n": ("count", None)}, source_schema=src,
+    )
+    view.refresh_from(t)
     t.update_schema(T.StructType([
         T.StructField("doc_id", T.LongType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_tok", T.StringType()),
-        T.StructField("lang", T.StringType()),
+        T.StructField("g", T.DoubleType()),
     ]))
     t.merge(spark.createDataFrame(
-        [("upsert", 51, "s0", "xyz", "en", 200)],
-        "op string, doc_id long, source string, n_tok string, lang string, seq long"),
-        "b3")
-    with pytest.raises(AggSpecError):
+        [("upsert", 3, 1.0, 3)], "op string, doc_id long, g double, seq long"), "b2")
+    with pytest.raises(AggSpecError, match="'g'"):
         view.refresh_from(t)
 
 

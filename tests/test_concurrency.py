@@ -197,6 +197,27 @@ def test_schema_update_races_serialize(spark, tmp_path):
     assert t3.read().count() == 1  # old-schema file normalized forward
 
 
+def test_schema_update_reapply_cannot_undo_a_widening(spark, tmp_path):
+    """A schema update that loses the race re-checks the widening rule
+    against the winner's schema: re-applying a stale schema would narrow
+    the column the winner widened, so it raises instead."""
+    import pyspark.sql.types as T
+
+    path = str(tmp_path / "t")
+    IceboxTable.create(spark, path, SCHEMA_V1, n_buckets=4)
+    t1 = IceboxTable.load(spark, path)
+    t2 = IceboxTable.load(spark, path)
+    wide = T.StructType([
+        f if f.name != "n_tok" else T.StructField("n_tok", T.LongType())
+        for f in SCHEMA_V1.fields
+    ])
+    t1.update_schema(wide)
+    with pytest.raises(ValueError, match="'n_tok'.*not a widening"):
+        t2.update_schema(T.StructType(
+            SCHEMA_V1.fields + [T.StructField("extra", T.StringType())]))
+    assert IceboxTable.load(spark, path).schema == wide
+
+
 # ---------------- metadata scaling (commit-log layer) ----------------
 
 

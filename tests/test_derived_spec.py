@@ -54,3 +54,29 @@ def test_sidecar_bytes_and_spec_round_trip(spark, tmp_path, cls, kwargs, sidecar
                 {o: tuple(s) for o, s in v.items()} if k == "aggs" else v
             )
 
+
+
+def test_crash_before_sidecar_leaves_no_table(spark, tmp_path, monkeypatch):
+    """The spec sidecar is written before the table becomes visible: a
+    create that dies writing it leaves nothing ``table_exists`` reports
+    (the engine would then fail to ``load`` it on every start), and the
+    next create succeeds and loads."""
+    from sparkcdc.commitstore import PosixCommitStore
+
+    path = str(tmp_path / "pk")
+    put = PosixCommitStore.put
+    calls = []
+
+    def dies_once(self, name, data):
+        if name == PackedTable.SPEC_FILE and not calls:
+            calls.append(name)
+            raise OSError("injected crash")
+        return put(self, name, data)
+
+    monkeypatch.setattr(PosixCommitStore, "put", dies_once)
+    with pytest.raises(OSError, match="injected"):
+        PackedTable.create(spark, path, seq_len=8, n_buckets=2)
+    assert not PackedTable.table_exists(path)
+    PackedTable.create(spark, path, seq_len=8, n_buckets=2)
+    assert PackedTable.table_exists(path)
+    assert PackedTable.load(spark, path).seq_len == 8

@@ -152,6 +152,87 @@ def test_update_schema_refuses_key_type_change(spark, tmp_path):
     assert sorted(r.v for r in t.read_keys([0, 1, 2]).collect()) == ["b", "b", "b"]
 
 
+RULE_V1 = T.StructType([T.StructField("doc_id", T.LongType()),
+                        T.StructField("a", T.IntegerType()),
+                        T.StructField("b", T.LongType()),
+                        T.StructField("s", T.StringType())])
+
+
+def _rule_schema(change):
+    fields = [f for f in RULE_V1.fields if f.name != change[0]]
+    if change[1] == "dropped":
+        return T.StructType(fields)
+    return T.StructType(fields + [T.StructField(change[0], change[1])])
+
+
+@pytest.mark.parametrize("change,legal", [
+    (("b", T.IntegerType()), False),           # narrowing bigint -> int
+    (("b", T.StringType()), False),            # not a widening
+    (("s", "dropped"), False),                 # dropped payload column
+    (("extra", T.StringType()), True),         # added column
+    (("a", T.LongType()), True),               # int -> bigint
+    (("s", T.TimestampType()), True),          # string -> timestamp
+], ids=["narrow", "bigint-to-string", "drop", "add", "int-to-bigint",
+        "string-to-timestamp"])
+def test_update_schema_enforces_widening_rule(spark, tmp_path, change, legal):
+    """The table owns the one evolution rule: every column stays and its
+    new type is a widening (schema_infer._WIDEN_OK) or unchanged; columns
+    may be added. A refused change raises naming the column and commits
+    nothing; a legal one commits and old files read forward."""
+    t = IceboxTable.create(spark, str(tmp_path / "t"), RULE_V1, n_buckets=2)
+    t.merge(spark.createDataFrame(
+        [(1, 7, 2**40, "2024-01-02 03:04:05", 1, "upsert")],
+        "doc_id long, a int, b long, s string, seq long, op string"), "b1")
+    sid = t.snapshot["snapshot_id"]
+    want = _rule_schema(change)
+    if not legal:
+        with pytest.raises(ValueError, match=f"'{change[0]}'.*not a widening"):
+            t.update_schema(want)
+        assert t.snapshot["snapshot_id"] == sid and t.schema == RULE_V1
+        return
+    t.update_schema(want)
+    assert IceboxTable.load(spark, str(tmp_path / "t")).schema == want
+    [row] = t.read().collect()
+    assert (row.doc_id, row.a, row.b) == (1, 7, 2**40)
+    assert dict(t.read().dtypes) == {f.name: f.dataType.simpleString() for f in want.fields}
+
+
+def _add_column_after(spark, tmp_path, schema, row):
+    """A table holding ``row`` in a file of ``schema``, then evolved by
+    one added column: the read normalizes that file forward."""
+    t = IceboxTable.create(spark, str(tmp_path / "t"), schema, n_buckets=2)
+    log = T.StructType(schema.fields + [T.StructField("seq", T.LongType()),
+                                        T.StructField("op", T.StringType())])
+    t.merge(spark.createDataFrame([(*row, 1, "upsert")], log), "b1")
+    t.update_schema(T.StructType(
+        schema.fields + [T.StructField("lang", T.StringType())]))
+    return t
+
+
+def test_string_tokens_column_reads_after_added_column(spark, tmp_path):
+    """The Arrow token normalization pass is chosen by type: a string
+    column that happens to be named ``tokens`` reads back intact from an
+    old-schema file; the int-array UDF would fail on it."""
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("tokens", T.StringType())])
+    t = _add_column_after(spark, tmp_path, schema, (1, "a b c"))
+    [row] = t.read().collect()
+    assert (row.doc_id, row.tokens, row.lang) == (1, "a b c", None)
+    assert dict(t.read().dtypes)["tokens"] == "string"
+
+
+def test_bigint_tokens_keep_width_after_added_column(spark, tmp_path):
+    """An ``array<bigint>`` tokens column is not the pass's ``array<int>``
+    type, so old-schema files keep their wide values and their type; the
+    pass would re-type them to int32 and wrap 2^40 to 0."""
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("tokens", T.ArrayType(T.LongType()))])
+    t = _add_column_after(spark, tmp_path, schema, (1, [2**40, 7]))
+    [row] = t.read().collect()
+    assert row.tokens == [2**40, 7]
+    assert dict(t.read().dtypes)["tokens"] == "array<bigint>"
+
+
 def test_schema_evolution_widen_and_add(spark, table):
     v1 = generate_changelog(spark, 2_000, 200, seed=4, schema_version=1)
     table.merge(v1, "b1")

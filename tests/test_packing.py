@@ -466,15 +466,15 @@ def test_packed_table_widens_with_source_token_evolution(spark, tmp_path):
         ).select("shard", "seq_id", "tokens").collect()
     )
     assert got == want
-    # a NON-widening evolution raises instead of corrupting
+    # a NON-widening evolution raises instead of corrupting: the source
+    # table refuses it before any consumer could see it
     V3 = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("tokens", T.ArrayType(T.StringType())),
         T.StructField("source", T.StringType()),
     ])
-    src.update_schema(V3)
     with pytest.raises(ValueError, match="not a widening"):
-        pt.refresh_from(src)
+        src.update_schema(V3)
 
 
 def test_consumers_survive_source_column_add(spark, tmp_path, pk_source):
